@@ -1,16 +1,28 @@
-"""Names and units of every metric the benchmark reports.
+"""The spans and fields the worker fills, and the declared metrics.
 
-BENCHMARK.json lists the same metrics; ``selftest.py`` checks that the
-two agree and that a run emits each one with its unit.
+BENCHMARK.json is the one list of metric names and units; ``declared``
+reads it. The lists below say which spans and fields the worker
+measures, and so how it fills each declared per-layer value.
 """
 
 from __future__ import annotations
+
+import json
+import os
+
+BENCHMARK_JSON = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCHMARK.json"
+)
 
 QUERIES = [
     "images_phash_pairs", "knox_stat", "pip_join", "pip_unique_owner",
     "lsh_candidate_pairs", "co_visitation", "knn_join", "embedding_topk",
     "minhash_signatures",
 ]
+
+# the work between wrapped layers: the joins and projections that the
+# pipeline does around its layer calls
+ENRICH_SPAN = "pipeline.enrich"
 
 PIPELINE_SPANS = [
     "pipeline.scan",
@@ -20,44 +32,17 @@ PIPELINE_SPANS = [
     "knn.knn_join",
     "tiling.salted_repartition",
     "snapshots.write_partitioned",
+    ENRICH_SPAN,
 ]
 
-FIELD_UNITS = {
-    "wall_s": "s",
-    "exec_run_s": "s",
-    "exec_cpu_s": "s",
-    "py_io_mb": "MB",
-    "shuffle_write_mb": "MB",
-    "spill_mb": "MB",
-    "tasks": "count",
-    "task_max_s": "s",
-}
-PIPELINE_FIELDS = list(FIELD_UNITS)
+PIPELINE_FIELDS = [
+    "wall_s", "exec_run_s", "exec_cpu_s", "py_io_mb",
+    "shuffle_write_mb", "spill_mb", "tasks", "task_max_s",
+]
 QUERY_FIELDS = PIPELINE_FIELDS[:6]
 
-END_TO_END = {
-    "setup_s": "s",
-    "wall_s": "s",
-    "rows_per_s": "1/s",
-    "cpu_s": "s",
-}
 
-PER_LAYER = {
-    **{
-        f"{span}.{f}": FIELD_UNITS[f]
-        for span in PIPELINE_SPANS for f in PIPELINE_FIELDS
-    },
-    **{
-        f"query.{q}.{f}": FIELD_UNITS[f]
-        for q in QUERIES for f in QUERY_FIELDS
-    },
-    "snapshots.commit.wall_s": "s",
-    "snapshots.commit.calls": "count",
-    "snapshots.out_bytes_per_row": "B/row",
-    "session.get_spark_s": "s",
-    "session.peak_rss_mb": "MB",
-    "trace.overhead_s": "s",
-    "trace.unattributed_run_s": "s",
-    "trace.attributed_share": "fraction",
-    "tasks.failed": "count",
-}
+def declared(kind: str) -> dict[str, str]:
+    """{name: unit} of the ``end_to_end`` or ``per_layer`` metrics."""
+    with open(BENCHMARK_JSON) as f:
+        return {m["name"]: m["unit"] for m in json.load(f)[kind]}

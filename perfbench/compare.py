@@ -10,7 +10,14 @@ The spread of a metric is the distance between the first and third
 quartile of its values (``statistics.quantiles(values, n=4)``) as a share
 of their median. A comparison refuses to run (exit 2) unless every file
 carries the same host stamp (cores and memory): numbers from different
-machines do not compare.
+machines do not compare. A run that reported ``correct: false`` is left
+out of every median and spread.
+
+Many per-layer metrics are 0 where a workload does no such work (spill,
+shuffle, spans it does not reach). Where a median is 0 no share is
+defined: the spread reads ``n/a``, and a change reads ``new`` with
+the absolute difference, so work that appears where there
+was none still shows.
 """
 
 from __future__ import annotations
@@ -44,7 +51,8 @@ def collect(paths: list[str]) -> tuple[dict, dict]:
             continue
         hosts.add(json.dumps(stamp["host"], sort_keys=True))
         if not result["correct"]:
-            print(f"{p}: run reported failed checks", file=sys.stderr)
+            print(f"{p}: run reported failed checks, left out", file=sys.stderr)
+            continue
         for name, m in result["metrics"].items():
             values[stamp["workload"]][name].append(m["value"])
     if len(hosts) > 1:
@@ -52,11 +60,20 @@ def collect(paths: list[str]) -> tuple[dict, dict]:
     return values, json.loads(hosts.pop()) if hosts else {}
 
 
-def spread(vals: list[float]) -> float:
+def spread(vals: list[float]) -> str:
     if len(vals) < 2:
-        return 0.0
+        return "n/a"
     q1, med, q3 = statistics.quantiles(vals, n=4)
-    return (q3 - q1) / med if med else 0.0
+    return f"{(q3 - q1) / med:.3f}" if med else "n/a"
+
+
+def change(base: float, new: float) -> str:
+    diff = new - base
+    if base:
+        return f"{diff / base:+.3f} ({diff:+.4g})"
+    if new:
+        return f"new ({diff:+.4g})"
+    return "+0.000"
 
 
 def main() -> int:
@@ -76,11 +93,10 @@ def main() -> int:
     for wl in sorted(base):
         for name, vals in sorted(base[wl].items()):
             med = statistics.median(vals)
-            line = f"{wl:15s} {name:45s} n={len(vals):2d} median={med:12.4f} spread={spread(vals):.3f}"
-            if wl in new and name in new[wl]:
+            line = f"{wl:15s} {name:45s} n={len(vals):2d} median={med:12.4f} spread={spread(vals)}"
+            if new.get(wl, {}).get(name):
                 new_med = statistics.median(new[wl][name])
-                change = (new_med - med) / med if med else 0.0
-                line += f"  against={new_med:12.4f} change={change:+.3f}"
+                line += f"  against={new_med:12.4f} change={change(med, new_med)}"
             print(line)
     return 0
 

@@ -1,19 +1,17 @@
-"""Seeded benchmark inputs, generated outside every timed region.
-
-Two input sets:
+"""Benchmark inputs, generated outside every timed region.
 
 * ``synth_tier`` writes one synth tier (images, polygons, features,
   wikidata) with ``datagen``'s own generators and the same row counts,
   schemas and row-group layout as ``datagen.ensure_dataset``; only the
   seed differs. Seed 42 reproduces the repo's own fixtures.
-* ``registry_tables`` writes the testdata-style tables that the registry
-  queries read (orders, customer, events, documents, embeddings). The
-  schemas match the repo's testdata tables (TESTDATA.md); the values are drawn from
-  the seed, so the keys (and through them the derived geo points) move
-  with it.
+* ``registry_images`` writes the image tier the registry's image query
+  reads in the benchmark: ``datagen.ensure_dataset("sf0.001")``, the
+  repo's own seed-42 fixture.
+* ``REGISTRY_TABLES`` is the fixed test-table set the registry queries
+  read, checked in under ``perfbench/testdata/sf0.1``.
 
-Everything lands under the directory the caller passes, never in the
-repo's ``data/``.
+Everything generated lands under the directory the caller passes, never
+in the repo's ``data/``.
 """
 
 from __future__ import annotations
@@ -21,31 +19,9 @@ from __future__ import annotations
 import json
 import os
 
-import numpy as np
-import pandas as pd
-import pyarrow as pa
-import pyarrow.parquet as pq
-
 from langtoolsosm_spark import datagen
 
-# registry input sizes: the testdata's sf0.01 row counts, except events at
-# the sf0.1 count (knox_stat runs slower on fewer events: on 4 cores 10k
-# take 13-27 s, 100k about 8 s)
-REGISTRY_ROWS = {
-    "orders": 15_000,
-    "customer": 1_500,
-    "events": 100_000,
-    "users": 1_500,
-    "documents": 500,
-    "embeddings": 500,
-}
-
-WORDS = (
-    "a the key agg row scan slow fast table value part hash merge batch "
-    "spark line sort window order data column join small customer query "
-    "big stream group filter vector"
-).split()
-LANGS = ["en", "en", "en", "zh", "es", "de", "fr"]
+REGISTRY_TABLES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "testdata", "sf0.1")
 
 
 def synth_tier(root: str, tier: str, seed: int) -> str:
@@ -75,79 +51,6 @@ def synth_tier(root: str, tier: str, seed: int) -> str:
     return out
 
 
-def _keys(rng: np.random.Generator, n: int) -> np.ndarray:
-    return np.sort(rng.choice(10 * n, size=n, replace=False)).astype(np.int64)
-
-
-def _ts(start: str, offsets: np.ndarray, unit: str) -> pd.Series:
-    # microsecond precision, as in the testdata tables (Spark rejects nanos)
-    return pd.Series(pd.Timestamp(start) + pd.to_timedelta(offsets, unit=unit)).astype(
-        "datetime64[us]"
-    )
-
-
-def _write(df: pd.DataFrame, path: str) -> None:
-    pq.write_table(pa.Table.from_pandas(df, preserve_index=False), path)
-
-
-def registry_tables(root: str, seed: int) -> str:
-    """Write the registry's input tables under ``<root>/registry``."""
-    rng = np.random.default_rng(seed)
-    out = os.path.join(root, "registry")
-    os.makedirs(out, exist_ok=True)
-    r = REGISTRY_ROWS
-
-    n = r["orders"]
-    _write(pd.DataFrame({
-        "o_orderkey": _keys(rng, n),
-        "o_custkey": rng.integers(0, r["customer"], n).astype(np.int64),
-        "o_orderstatus": rng.choice(["F", "O", "P"], n),
-        "o_totalprice": np.round(rng.uniform(1_000, 500_000, n), 2),
-        "o_orderdate": _ts("1995-01-01", rng.integers(0, 2404, n), "D"),
-        "o_orderpriority": rng.choice(
-            ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"], n),
-    }), os.path.join(out, "orders.parquet"))
-
-    n = r["customer"]
-    ck = _keys(rng, n)
-    _write(pd.DataFrame({
-        "c_custkey": ck,
-        "c_name": [f"Customer#{k:09d}" for k in ck],
-        "c_nationkey": rng.integers(0, 25, n).astype(np.int32),
-        "c_acctbal": np.round(rng.uniform(-999.99, 9999.99, n), 2),
-        "c_mktsegment": rng.choice(
-            ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"], n),
-    }), os.path.join(out, "customer.parquet"))
-
-    n = r["events"]
-    _write(pd.DataFrame({
-        "event_id": _keys(rng, n),
-        "ts": _ts("2024-01-01", np.sort(rng.integers(0, 30 * 86_400 * 10**6, n)), "us"),
-        "user_id": rng.integers(0, r["users"], n).astype(np.int64),
-        "event_type": rng.choice(["click", "view", "purchase", "signup", "error"], n),
-        "value": np.round(rng.exponential(50.0, n), 2) + 0.01,
-        "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n)],
-    }), os.path.join(out, "events.parquet"))
-
-    n = r["documents"]
-    texts = [
-        " ".join(rng.choice(WORDS, size=int(rng.integers(10, 110))))
-        for _ in range(n)
-    ]
-    _write(pd.DataFrame({
-        "doc_id": np.arange(n, dtype=np.int64),
-        "text": texts,
-        "lang": rng.choice(LANGS, n),
-        "source": [f"src{i % 20}" for i in range(n)],
-        "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
-    }), os.path.join(out, "documents.parquet"))
-
-    n = r["embeddings"]
-    v = rng.standard_normal((n, 64)).astype(np.float32)
-    v /= np.linalg.norm(v, axis=1, keepdims=True)
-    _write(pd.DataFrame({
-        "vec_id": np.arange(n, dtype=np.int64),
-        "embedding": list(v),
-        "label": rng.integers(0, 10, n).astype(np.int32),
-    }), os.path.join(out, "embeddings.parquet"))
-    return out
+def registry_images(root: str) -> str:
+    """Write the registry's image tier under ``root``; return the directory."""
+    return datagen.ensure_dataset("sf0.001", root=root)

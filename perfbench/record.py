@@ -1,6 +1,6 @@
 """Record reference output digests into perfbench/reference.json.
 
-    python3 perfbench/record.py 0-31 42
+    python3 perfbench/record.py 0-20 42
 
 Runs each workload's job once per fixture seed in one Spark session and
 stores the digests that ``run.py`` later compares every run against.
@@ -59,18 +59,24 @@ def main() -> int:
     path = os.path.join(HERE, "reference.json")
     with open(path) as f:
         ref = json.load(f)
+
+    def save() -> None:
+        with open(path, "w") as f:
+            json.dump(ref, f, indent=1)
+            f.write("\n")
+
     spark = get_spark("perfbench-record", cores=len(os.sched_getaffinity(0)))
     try:
         ref["registry_heavy"] = {
             str(run.REGISTRY_SEED): record(spark, "registry_heavy", run.REGISTRY_SEED)
         }
+        save()
+        print(f"registry_heavy: {ref['registry_heavy']}", flush=True)
         for seed in seeds(sys.argv[1:]):
             ref.setdefault("pipeline", {})[str(seed)] = record(spark, "pipeline", seed)
             ref["pipeline"] = dict(sorted(ref["pipeline"].items(), key=lambda kv: int(kv[0])))
             # saved after every seed, so an interrupted recording keeps its work
-            with open(path, "w") as f:
-                json.dump(ref, f, indent=1)
-                f.write("\n")
+            save()
             print(f"pipeline seed {seed}: {ref['pipeline'][str(seed)]}", flush=True)
     finally:
         spark.stop()

@@ -3,13 +3,18 @@
 ``Tracer`` swaps each layer's public function for a wrapper that runs the
 layer under a Spark job group named after its span and materializes the
 returned DataFrame once, at the boundary, with
-``localCheckpoint(eager=True)``. The next layer therefore reads a
-checkpoint and no prefix is computed twice. The first layer's DataFrame
-argument is materialized first, under the job's source span
-(``pipeline.scan`` for the flagship, ``imagecodec.decode_verify`` for
-ingest, whose first layer reads the decoded images). Wrappers
-only act at the outermost level: a layer called from inside another
-layer runs untouched, inside its caller's span.
+``localCheckpoint(eager=True)``. The layer's DataFrame argument is
+materialized first, so the work the caller did since the previous layer
+is not charged to this one. For the job's first layer that is the
+source, under the job's source span (``pipeline.scan`` for the flagship,
+``imagecodec.decode_verify`` for ingest, whose first layer reads the
+decoded images). For every later layer it is the caller's work between
+layers (joins, projections, the pipeline's own persists), under
+``pipeline.enrich``; an argument that is a previous layer's checkpoint
+is passed on as it is. The next layer therefore reads a checkpoint and
+no prefix is computed twice. Wrappers only act at the outermost level:
+a layer called from inside another layer runs untouched, inside its
+caller's span.
 
 ``harvest`` then reads, through py4j and with the UI off, the stages of
 every job started since ``Tracer.start`` from ``AppStatusStore`` and the
@@ -27,6 +32,8 @@ from pyspark.sql import DataFrame
 
 from langtoolsosm_spark.operators import knn, pip_join, tiling
 from langtoolsosm_spark.sources import snapshots
+
+from catalog import ENRICH_SPAN
 
 # (span, module, attribute) of every wrapped layer function
 LAYERS = [
@@ -65,6 +72,7 @@ class Tracer:
         self.commit_calls = 0
         self._depth = 0
         self._first = True
+        self._outputs: list[DataFrame] = []
         self._saved: list = []
         self._job_floor = 0
 
@@ -87,6 +95,7 @@ class Tracer:
         """A pipeline job starts: its first layer's input goes to ``source_span``."""
         self.source_span = source_span
         self._first = True
+        self._outputs.clear()
 
     def _wrap(self, name: str, fn):
         def layer(*args, **kwargs):
@@ -94,14 +103,16 @@ class Tracer:
                 return fn(*args, **kwargs)
             self._depth += 1
             try:
-                if self._first and args and isinstance(args[0], DataFrame):
-                    self._first = False
-                    with self.span(self.source_span):
-                        args = (args[0].localCheckpoint(eager=True),) + args[1:]
+                src = args[0] if args else None
+                if isinstance(src, DataFrame) and not any(src is c for c in self._outputs):
+                    with self.span(self.source_span if self._first else ENRICH_SPAN):
+                        args = (src.localCheckpoint(eager=True),) + args[1:]
+                self._first = False
                 with self.span(name):
                     out = fn(*args, **kwargs)
                     if isinstance(out, DataFrame):
                         out = out.localCheckpoint(eager=True)
+                        self._outputs.append(out)
                 return out
             finally:
                 self._depth -= 1
@@ -138,6 +149,7 @@ class Tracer:
         for mod, attr, orig in reversed(self._saved):
             setattr(mod, attr, orig)
         self._saved.clear()
+        self._outputs.clear()
 
     # -- harvest -----------------------------------------------------------
 
