@@ -265,7 +265,7 @@ def main():
     # byte-identical buckets between the two, so its recall is the
     # kernel's by construction — timing it doubled the LSH wall for no
     # extra signal. Set BENCH_LSH_EXPR=1 to time it anyway.
-    ann_recall_kernel = recall("lsh_kernel", ann_lsh_topk(emb, kernel_buckets=True))
+    ann_recall_kernel = recall("lsh_kernel", ann_lsh_topk(emb))
     time_expr_lsh = os.environ.get("BENCH_LSH_EXPR", "").lower() not in ("", "0", "false")
     ann_recall = (
         recall("lsh", ann_lsh_topk(emb)) if time_expr_lsh else ann_recall_kernel
@@ -308,7 +308,7 @@ def main():
         return round(n_hit / cn_true, 3) if cn_true else 0.0
 
     ann_recall_clustered = {
-        "lsh_kernel": crecall(ann_lsh_topk(cemb, kernel_buckets=True)),
+        "lsh_kernel": crecall(ann_lsh_topk(cemb)),
         "ivf": crecall(ivf_ann_topk(cemb)),
         "ivf_lloyd": crecall(ivf_lloyd_ann_topk(cemb)),
         "pq_adc": crecall(pq_ann_topk(cemb)),
@@ -376,20 +376,23 @@ def main():
             out["ab"] = ab
             out["ab_ratio"] = ab["ab_ratio"]
     # attach the latest N-vs-4N scaling evidence (bench_scaling.py writes
-    # BENCH/BASELINE.md; the JSON sidecar carries the machine numbers)
+    # BENCH/BASELINE.md; the JSON sidecar carries the machine numbers),
+    # but only when it was measured on a host with this run's core count:
+    # numbers from another machine say nothing about this run
     side = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH", "scaling.json")
     if os.path.exists(side):
         try:
             with open(side) as f:
                 sc = json.load(f)
-            out["scaling"] = {
-                "lo_cores": sc["lo"]["cores"],
-                "hi_cores": sc["hi"]["cores"],
-                "lo_images_per_sec": sc["lo"]["rows_per_sec"],
-                "hi_images_per_sec": sc["hi"]["rows_per_sec"],
-                "efficiency": sc["scaling_efficiency"],
-                "outputs_identical": sc["outputs_identical"],
-            }
+            if sc.get("host_cores") == os.cpu_count():
+                out["scaling"] = {
+                    "lo_cores": sc["lo"]["cores"],
+                    "hi_cores": sc["hi"]["cores"],
+                    "lo_images_per_sec": sc["lo"]["rows_per_sec"],
+                    "hi_images_per_sec": sc["hi"]["rows_per_sec"],
+                    "efficiency": sc["scaling_efficiency"],
+                    "outputs_identical": sc["outputs_identical"],
+                }
         except Exception:
             pass
     print(json.dumps(out))

@@ -117,6 +117,9 @@ def main():
         "core_factor": factor,
         "scaling_efficiency": round(eff, 3),
         "outputs_identical": identical,
+        # bench.py attaches this sidecar only to runs on a host with the
+        # same core count
+        "host_cores": os.cpu_count(),
     }
     print(json.dumps(result))
 

@@ -76,111 +76,25 @@ def topk_dot_kernel(
     (via float64 matmul when magnitudes stay under 2^53 — exact — else
     int64).
 
-    The query side is driver-collected, but gated by a count first (the
-    ``dedup_apply`` pattern): above ``shard_rows`` queries it is
-    processed in ``ceil(n / shard_rows)`` deterministic id-sharded
-    chunks (``pmod(id, n_shards)``), each its own bounded broadcast —
-    driver and executor memory never hold more than one shard's matrix
-    at a time, because every shard's partial result is materialized
-    (eager localCheckpoint) before its broadcast is destroyed. The
-    union of per-shard partials feeds one global merge; shards partition
-    the query set, so the result is the byte-exact union of per-shard
-    exact answers.
+    The query side is collected, sharded and broadcast by the shared
+    ``_corpus_topk_pass`` (``shard_rows`` queries per corpus pass); this
+    kernel adds only the unmasked dot score.
     """
-    import math
-
-    import numpy as np
-    import pandas as pd
-
     from .spread import scan_spread
 
-    qarr = F.transform(F.col(vec_col), lambda x: _quantize(x))
-    corpus = scan_spread(
-        emb.select(F.col(id_col).alias("__cid"), qarr.alias("__q"))
+    corpus = scan_spread(_cid_vecs(emb, id_col, vec_col))
+    qsrc = (
+        corpus.filter(F.col("__cid") % 50 == 0)
+        if queries is None
+        else _cid_vecs(queries, id_col, vec_col)
     )
-    qsrc = corpus if queries is None else queries.select(
-        F.col(id_col).alias("__cid"), qarr.alias("__q")
-    )
-    if queries is None:
-        qsrc = qsrc.filter(F.col("__cid") % 50 == 0)
-    n_q = qsrc.count()
-    n_shards = max(1, math.ceil(n_q / shard_rows))
-    NEG = np.iinfo(np.int64).min
-
-    def make_run(bc):
-        def run(batches):
-            qids, Q = bc.value
-            nq, dim = Q.shape
-            qmax = int(np.abs(Q).max()) if Q.size else 0
-            for pdf in batches:
-                nb = len(pdf)
-                if nb == 0 or nq == 0:
-                    continue
-                cid = pdf["__cid"].to_numpy(np.int64)
-                X = np.array(pdf["__q"].tolist(), dtype=np.int64)
-                xmax = int(np.abs(X).max()) if X.size else 0
-                # float64 matmul (BLAS) is exact while every product and
-                # the running sum stay under 2^53; else int64
-                if qmax * xmax * dim < (1 << 53):
-                    D = (Q.astype(np.float64) @ X.T.astype(np.float64)).astype(np.int64)
-                else:
-                    D = Q @ X.T
-                D[qids[:, None] == cid[None, :]] = NEG  # never match self
-                kk = min(k, nb)
-                out_q, out_n, out_d = [], [], []
-                for qi in range(nq):
-                    row = D[qi]
-                    # exact partial top-k under (dot desc, id asc): keep
-                    # every boundary tie, settle ties by id, then truncate
-                    thresh = np.partition(row, nb - kk)[nb - kk]
-                    keep = np.flatnonzero(row >= thresh)
-                    keep = keep[np.lexsort((cid[keep], -row[keep]))][:kk]
-                    keep = keep[row[keep] != NEG]
-                    out_q.append(np.full(len(keep), qids[qi], dtype=np.int64))
-                    out_n.append(cid[keep])
-                    out_d.append(row[keep])
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "dot": np.concatenate(out_d),
-                    }
-                )
-
-        return run
-
-    parts = []
-    for s in range(n_shards):
-        shard = qsrc if n_shards == 1 else qsrc.filter(
-            F.pmod(F.col("__cid"), F.lit(n_shards)) == s
-        )
-        q_pdf = shard.toPandas().sort_values("__cid", kind="stable")
-        qids = q_pdf["__cid"].to_numpy(np.int64)
-        Q = (
-            np.array(q_pdf["__q"].tolist(), dtype=np.int64)
-            if len(q_pdf)
-            else np.zeros((0, 1), dtype=np.int64)
-        )
-        bc = emb.sparkSession.sparkContext.broadcast((qids, Q))
-        part = corpus.mapInPandas(
-            make_run(bc), schema="query_id long, neighbor_id long, dot long"
-        )
-        # materialize the <= k x partitions partial winners, then release
-        # the shard's broadcast — nothing downstream re-reads it, and a
-        # long-lived session doesn't accumulate query-matrix copies
-        part = part.localCheckpoint(eager=True)
-        bc.destroy()
-        parts.append(part)
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        merged.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dot")
+    return _corpus_topk_pass(
+        corpus,
+        qsrc,
+        k,
+        lambda qids, Q: Q,
+        lambda cid, X, Q: _guarded_matmul(Q, X),
+        shard_rows=shard_rows,
     )
 
 
@@ -289,12 +203,7 @@ def sign_lsh_buckets_kernel(
             n = len(pdf)
             if n == 0:
                 continue
-            X = np.array(pdf["__xq"].tolist(), dtype=np.int64)
-            xmax = int(np.abs(X).max()) if X.size else 0
-            if xmax * dim < (1 << 53):
-                D = (X.astype(np.float64) @ S.T.astype(np.float64)).astype(np.int64)
-            else:
-                D = X @ S.T
+            D = _guarded_matmul(_decode_vecs(pdf["__xq"]), S)
             bits = (D > 0).astype(np.int64).reshape(n, n_tables, n_bits)
             buckets = (bits * pw[None, None, :]).sum(axis=2).astype(np.int32)
             yield pd.DataFrame(
@@ -368,6 +277,10 @@ def ivf_assign(
     )
 
 
+# masked-out score: below every real integer dot / negated distance
+_NEG = -(1 << 63)
+
+
 def _guarded_matmul(A, B):
     """Exact integer A @ B.T for (n, dim) int64 operands: float64 BLAS
     while every product times the inner dim stays under 2^53 (exact in
@@ -382,20 +295,19 @@ def _guarded_matmul(A, B):
     return A @ B.T
 
 
-def _np_partial_topk(D, qids, cid, k, NEG):
+def _np_partial_topk(D, qids, cid, k):
     """Per-query partial top-k under (dot desc, id asc) over a masked dot
-    matrix (invalid pairs already set to NEG). Unlike the unmasked
-    ``topk_dot_kernel`` inner loop, NEG entries can dominate a row, so
-    they are dropped BEFORE the threshold partition (a NEG threshold
-    would let NEG entries crowd real candidates out of the truncation).
-    Returns (query_id, neighbor_id, dot) arrays or None."""
+    matrix (invalid pairs already set to ``_NEG``). NEG entries can
+    dominate a row, so they are dropped BEFORE the threshold partition (a
+    NEG threshold would let NEG entries crowd real candidates out of the
+    truncation). Returns (query_id, neighbor_id, dot) arrays or None."""
     import numpy as np
 
     out_q, out_n, out_d = [], [], []
     nq = D.shape[0]
     for qi in range(nq):
         row = D[qi]
-        valid = np.flatnonzero(row != NEG)
+        valid = np.flatnonzero(row != _NEG)
         if valid.size == 0:
             continue
         kk = min(k, valid.size)
@@ -419,10 +331,10 @@ def _merge_topk_partials(
     parts: list[DataFrame], k: int, out_col: str = "dot", negate: bool = False
 ) -> DataFrame:
     """Global (dot desc, id asc) row_number merge over the per-partition
-    partial winners — identical to the ``topk_dot_kernel`` merge. The
-    ascending-metric families (ADC / SQ8 distances) ride the same merge
-    by negating the metric in their kernels; ``negate=True`` flips it
-    back on output (dot desc == distance asc, ties id asc either way)."""
+    partial winners. The ascending-metric families (ADC / SQ8 distances)
+    ride the same merge by negating the metric in their kernels;
+    ``negate=True`` flips it back on output (dot desc == distance asc,
+    ties id asc either way)."""
     merged = parts[0]
     for p in parts[1:]:
         merged = merged.unionByName(p)
@@ -435,6 +347,146 @@ def _merge_topk_partials(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", out_val.alias(out_col))
     )
+
+
+def _decode_vecs(s):
+    """(n, dim) int64 matrix from a pandas Series of equal-length integer
+    arrays: the Arrow -> Python vector decode every corpus pass, codebook
+    and query collect goes through. ``tolist`` is kept on purpose: on the
+    object-of-ndarray Series ``mapInPandas`` hands over it beat
+    ``np.stack`` and ``np.vstack`` by about 2x (10k x 64 batch); the
+    zero-copy Arrow ``flatten().reshape`` route needs ``mapInArrow``."""
+    import numpy as np
+
+    return np.array(s.tolist(), dtype=np.int64)
+
+
+def _sq_dists(A, B):
+    """(nA, nB) exact integer squared L2 of every A row against every B
+    row: |a|^2 - 2 a.b + |b|^2 over the guarded matmul."""
+    return (
+        (A * A).sum(axis=1)[:, None]
+        - 2 * _guarded_matmul(A, B)
+        + (B * B).sum(axis=1)[None, :]
+    )
+
+
+def _nearest_list(X, C):
+    """Position of each X row's nearest C row (coarse list or codebook
+    entry). C is sorted by its id, so argmin's first-minimum rule IS the
+    (l2, id) struct-min tie rule of the join formulations."""
+    return _sq_dists(X, C).argmin(axis=1)
+
+
+def _probe_mask(Q, C, ids, nprobe):
+    """(nq, n_lists) bool: each query's ``nprobe`` nearest coarse lists —
+    row_number over (l2 asc, centroid_id asc) <= nprobe."""
+    import numpy as np
+
+    d2 = _sq_dists(Q, C)
+    mask = np.zeros(d2.shape, dtype=bool)
+    npb = min(nprobe, len(ids))
+    for i in range(len(Q)):
+        mask[i, np.lexsort((ids, d2[i]))[:npb]] = True
+    return mask
+
+
+def _corpus_topk_pass(
+    corpus: DataFrame,
+    qsrc: DataFrame,
+    k: int,
+    prepare,
+    score,
+    *,
+    out_col: str = "dot",
+    negate: bool = False,
+    shard_rows: int = 65_536,
+) -> DataFrame:
+    """The one corpus pass under every exact and approximate top-k kernel.
+
+    ``corpus`` and ``qsrc`` are (``__cid`` long, ``__xq`` array<long>)
+    frames, quantized JVM-side. The query side is driver-collected, but
+    gated by a count first (the ``dedup_apply`` pattern): above
+    ``shard_rows`` queries it is processed in ``ceil(n_q / shard_rows)``
+    deterministic id-sharded chunks (``pmod(id, n_shards)``). Each shard,
+    sorted by id, is decoded to ``(qids, Q)`` and broadcast together with
+    its family payload ``prepare(qids, Q)`` (probe mask, bucket mask, ADC
+    tables, shortlist index). Per Arrow batch of the corpus,
+    ``score(cid, X, payload)`` returns the (nq, nb) int64 score matrix —
+    higher is better, pairs outside the family's candidate set already
+    ``_NEG``; self matches are masked here and ``_np_partial_topk`` keeps
+    the exact (score desc, id asc) partial winners. Ascending metrics
+    return their negation and pass ``negate=True`` to flip it back under
+    ``out_col``.
+
+    Driver and executor memory never hold more than one shard's payload:
+    every shard's partial result is materialized (eager localCheckpoint)
+    before its broadcast is destroyed, so a long-lived session does not
+    accumulate query-matrix copies either. Shards partition the query
+    set, so the one global ``_merge_topk_partials`` over their union is
+    the byte-exact union of per-shard exact answers. A shard with no
+    queries, or whose ``prepare`` returns None (no candidate is possible:
+    no coarse lists, an empty codebook), costs no corpus pass; with no
+    shard left the result is the empty frame of the same schema.
+
+    Crossover: a query set costs ``ceil(n_q / shard_rows)`` full corpus
+    passes, and each Arrow batch (``maxRecordsPerBatch`` = 10,000 in
+    ``session.get_spark``) builds a score matrix of up to
+    ``shard_rows x 10,000`` int64 values — 65,536 x 10,000 x 8 B, about
+    5.2 GB per task at the default. The float64 product inside
+    ``_guarded_matmul`` roughly doubles that peak. Raising ``shard_rows``
+    trades passes for per-task memory linearly; no gate bounds it yet.
+    """
+    import math
+
+    import numpy as np
+    import pandas as pd
+
+    schema = "query_id long, neighbor_id long, dot long"
+    n_q = qsrc.count()
+    n_shards = max(1, math.ceil(n_q / shard_rows))
+    sc = corpus.sparkSession.sparkContext
+
+    def make_run(bc):
+        def run(batches):
+            qids, payload = bc.value
+            for pdf in batches:
+                if not len(pdf):
+                    continue
+                cid = pdf["__cid"].to_numpy(np.int64)
+                D = score(cid, _decode_vecs(pdf["__xq"]), payload)
+                D[qids[:, None] == cid[None, :]] = _NEG  # never match self
+                got = _np_partial_topk(D, qids, cid, k)
+                if got is not None:
+                    yield pd.DataFrame(
+                        {"query_id": got[0], "neighbor_id": got[1], "dot": got[2]}
+                    )
+
+        return run
+
+    parts = []
+    for s in range(n_shards):
+        shard = qsrc if n_shards == 1 else qsrc.filter(
+            F.pmod(F.col("__cid"), F.lit(n_shards)) == s
+        )
+        q_pdf = shard.toPandas().sort_values("__cid", kind="stable")
+        if not len(q_pdf):
+            continue
+        qids = q_pdf["__cid"].to_numpy(np.int64)
+        payload = prepare(qids, _decode_vecs(q_pdf["__xq"]))
+        if payload is None:
+            continue
+        bc = sc.broadcast((qids, payload))
+        # materialize the <= k x partitions partial winners, then release
+        # the shard's broadcast — nothing downstream re-reads it
+        part = corpus.mapInPandas(make_run(bc), schema=schema).localCheckpoint(
+            eager=True
+        )
+        bc.destroy()
+        parts.append(part)
+    if not parts:
+        parts = [corpus.sparkSession.createDataFrame([], schema)]
+    return _merge_topk_partials(parts, k, out_col=out_col, negate=negate)
 
 
 def _ivf_topk_kernel(
@@ -465,98 +517,35 @@ def _ivf_topk_kernel(
     are one BLAS matmul per batch.
 
     ``cents``: (centroid_id, __cv array<long>) — already quantized.
-    Queries (the % 50 == 0 fixture sample) are driver-collected behind
-    the counted ``shard_rows`` gate exactly like ``topk_dot_kernel``.
+    Queries (the % 50 == 0 fixture sample) go through the shared
+    ``_corpus_topk_pass``, like ``topk_dot_kernel``.
     """
-    import math
-
     import numpy as np
-    import pandas as pd
+
+    from .spread import scan_spread
 
     c_pdf = cents.toPandas().sort_values("centroid_id", kind="stable")
     cent_ids = c_pdf["centroid_id"].to_numpy(np.int64)
-    C = (
-        np.array(c_pdf["__cv"].tolist(), dtype=np.int64)
-        if len(c_pdf)
-        else np.zeros((0, 1), dtype=np.int64)
-    )
-    from .spread import scan_spread
-
+    C = _decode_vecs(c_pdf["__cv"])
     corpus = _corpus if _corpus is not None else scan_spread(
-        _quantized_vecs(emb, id_col, vec_col, "__xq").select(
-            F.col(id_col).alias("__cid"), "__xq"
-        )
+        _cid_vecs(emb, id_col, vec_col)
     )
-    qsrc = corpus.filter(F.col("__cid") % 50 == 0)
-    n_q = qsrc.count()
-    n_shards = max(1, math.ceil(n_q / shard_rows))
-    NEG = np.iinfo(np.int64).min
-    sc = emb.sparkSession.sparkContext
 
-    def make_run(bc):
-        def run(batches):
-            qids, Q, mask, C = bc.value
-            nq = len(qids)
-            for pdf in batches:
-                nb = len(pdf)
-                if nb == 0 or nq == 0 or not len(C):
-                    continue
-                cid = pdf["__cid"].to_numpy(np.int64)
-                X = np.array(pdf["__xq"].tolist(), dtype=np.int64)
-                # nearest coarse list per corpus vector: position into the
-                # centroid_id-sorted C, so argmin's first-minimum rule IS
-                # the (l2, centroid_id) struct-min tie rule
-                G = _guarded_matmul(X, C)
-                d2 = (
-                    (X * X).sum(axis=1)[:, None]
-                    - 2 * G
-                    + (C * C).sum(axis=1)[None, :]
-                )
-                pos = d2.argmin(axis=1)
-                D = _guarded_matmul(Q, X)
-                D[~mask[:, pos]] = NEG
-                D[qids[:, None] == cid[None, :]] = NEG  # never match self
-                got = _np_partial_topk(D, qids, cid, k, NEG)
-                if got is None:
-                    continue
-                yield pd.DataFrame(
-                    {"query_id": got[0], "neighbor_id": got[1], "dot": got[2]}
-                )
+    def prepare(qids, Q):
+        if not len(C):
+            return None  # no coarse lists -> no probes -> no candidates
+        return Q, _probe_mask(Q, C, cent_ids, nprobe)
 
-        return run
+    def score(cid, X, payload):
+        Q, mask = payload
+        D = _guarded_matmul(Q, X)
+        D[~mask[:, _nearest_list(X, C)]] = _NEG
+        return D
 
-    parts = []
-    for s in range(n_shards):
-        shard = qsrc if n_shards == 1 else qsrc.filter(
-            F.pmod(F.col("__cid"), F.lit(n_shards)) == s
-        )
-        q_pdf = shard.toPandas().sort_values("__cid", kind="stable")
-        qids = q_pdf["__cid"].to_numpy(np.int64)
-        Q = (
-            np.array(q_pdf["__xq"].tolist(), dtype=np.int64)
-            if len(q_pdf)
-            else np.zeros((0, 1), dtype=np.int64)
-        )
-        # probe mask: row_number over (l2 asc, centroid_id asc) <= nprobe
-        mask = np.zeros((len(qids), len(cent_ids)), dtype=bool)
-        if len(qids) and len(cent_ids):
-            Gq = _guarded_matmul(Q, C)
-            d2q = (
-                (Q * Q).sum(axis=1)[:, None]
-                - 2 * Gq
-                + (C * C).sum(axis=1)[None, :]
-            )
-            npb = min(nprobe, len(cent_ids))
-            for i in range(len(qids)):
-                mask[i, np.lexsort((cent_ids, d2q[i]))[:npb]] = True
-        bc = sc.broadcast((qids, Q, mask, C))
-        part = corpus.mapInPandas(
-            make_run(bc), schema="query_id long, neighbor_id long, dot long"
-        )
-        part = part.localCheckpoint(eager=True)
-        bc.destroy()
-        parts.append(part)
-    return _merge_topk_partials(parts, k)
+    return _corpus_topk_pass(
+        corpus, corpus.filter(F.col("__cid") % 50 == 0), k, prepare, score,
+        shard_rows=shard_rows,
+    )
 
 
 def ivf_ann_topk(
@@ -644,6 +633,14 @@ def _quantized_vecs(emb: DataFrame, id_col: str, vec_col: str, out: str) -> Data
     )
 
 
+def _cid_vecs(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(__cid, __xq): the quantized corpus/query frame the corpus passes
+    and Lloyd rounds read."""
+    return _quantized_vecs(emb, id_col, vec_col, "__xq").select(
+        F.col(id_col).alias("__cid"), "__xq"
+    )
+
+
 def _assign_to(vecs: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
     """(id, centroid_id): argmin quantized L2 against a broadcast centroid
     table (cents: centroid_id, __cv array<long>), ties to smaller id."""
@@ -691,9 +688,7 @@ def ivf_train_lloyd(
 
     spark = emb.sparkSession
     corpus = _corpus if _corpus is not None else scan_spread(
-        _quantized_vecs(emb, id_col, vec_col, "__xq").select(
-            F.col(id_col).alias("__cid"), "__xq"
-        )
+        _cid_vecs(emb, id_col, vec_col)
     ).localCheckpoint(eager=True)
     seeds_pdf = (
         corpus.filter(F.col("__cid") < n_centroids)
@@ -703,7 +698,7 @@ def ivf_train_lloyd(
     codes0 = seeds_pdf["__cid"].to_numpy(np.int64)
     if not len(codes0):
         return spark.createDataFrame([], "centroid_id long, __cv array<long>")
-    S0 = np.array(seeds_pdf["__xq"].tolist(), dtype=np.int64)
+    S0 = _decode_vecs(seeds_pdf["__xq"])
     dim = S0.shape[1]
     books = _lloyd_rounds(corpus, {0: (codes0, S0)}, iters, dim)
     rows = [
@@ -763,11 +758,7 @@ def ivf_lloyd_ann_topk(
     formulation survives as ``ivf_lloyd_ann_topk_join`` for parity)."""
     from .spread import scan_spread
 
-    corpus = scan_spread(
-        _quantized_vecs(emb, id_col, vec_col, "__xq").select(
-            F.col(id_col).alias("__cid"), "__xq"
-        )
-    ).localCheckpoint(eager=True)
+    corpus = scan_spread(_cid_vecs(emb, id_col, vec_col)).localCheckpoint(eager=True)
     cents = ivf_train_lloyd(
         emb, n_centroids, iters, id_col, vec_col, _corpus=corpus
     )
@@ -903,10 +894,7 @@ def _lsh_topk_kernel(
     LSH worst case), which is why the join + two vector re-attaches grew
     superlinearly; the masked matmul pays the same dots at BLAS speed
     and shuffles only <= k x partitions partial winners."""
-    import math
-
     import numpy as np
-    import pandas as pd
 
     S = np.array(
         [
@@ -927,76 +915,33 @@ def _lsh_topk_kernel(
         bits = (G > 0).astype(np.int64).reshape(len(M), n_tables, n_bits)
         return (bits * pw[None, None, :]).sum(axis=2)
 
-    corpus = _quantized_vecs(emb, id_col, vec_col, "__xq").select(
-        F.col(id_col).alias("__cid"), "__xq"
-    )
+    corpus = _cid_vecs(emb, id_col, vec_col)
     if queries is None:
         qsrc = corpus.filter(F.col("__cid") % 50 == 0)
     else:
-        qsrc = _quantized_vecs(queries, id_col, vec_col, "__xq").select(
-            F.col(id_col).alias("__cid"), "__xq"
-        )
-    n_q = qsrc.count()
-    n_shards = max(1, math.ceil(n_q / shard_rows))
-    NEG = np.iinfo(np.int64).min
-    sc = emb.sparkSession.sparkContext
+        qsrc = _cid_vecs(queries, id_col, vec_col)
 
-    def make_run(bc):
-        def run(batches):
-            qids, Q, mask = bc.value  # mask: (nq, T, n_buckets) bool
-            nq = len(qids)
-            for pdf in batches:
-                nb = len(pdf)
-                if nb == 0 or nq == 0:
-                    continue
-                cid = pdf["__cid"].to_numpy(np.int64)
-                X = np.array(pdf["__xq"].tolist(), dtype=np.int64)
-                code = buckets(X)  # (nb, T)
-                valid = np.zeros((nq, nb), dtype=bool)
-                for t in range(n_tables):
-                    valid |= mask[:, t, code[:, t]]
-                D = _guarded_matmul(Q, X)
-                D[~valid] = NEG
-                D[qids[:, None] == cid[None, :]] = NEG  # never match self
-                got = _np_partial_topk(D, qids, cid, k, NEG)
-                if got is None:
-                    continue
-                yield pd.DataFrame(
-                    {"query_id": got[0], "neighbor_id": got[1], "dot": got[2]}
-                )
-
-        return run
-
-    parts = []
-    for s in range(n_shards):
-        shard = qsrc if n_shards == 1 else qsrc.filter(
-            F.pmod(F.col("__cid"), F.lit(n_shards)) == s
-        )
-        q_pdf = shard.toPandas().sort_values("__cid", kind="stable")
-        qids = q_pdf["__cid"].to_numpy(np.int64)
-        Q = (
-            np.array(q_pdf["__xq"].tolist(), dtype=np.int64)
-            if len(q_pdf)
-            else np.zeros((0, 1), dtype=np.int64)
-        )
-        qb = (
-            buckets(Q)
-            if len(qids)
-            else np.zeros((0, n_tables), dtype=np.int64)
-        )
+    def prepare(qids, Q):
+        # (nq, T, n_buckets): the query's probed buckets per table
+        qb = buckets(Q)
         mask = np.zeros((len(qids), n_tables, n_buckets), dtype=bool)
         rows = np.arange(len(qids))
         for m in pmasks:
             for t in range(n_tables):
                 mask[rows, t, qb[:, t] ^ m] = True
-        bc = sc.broadcast((qids, Q, mask))
-        part = corpus.mapInPandas(
-            make_run(bc), schema="query_id long, neighbor_id long, dot long"
-        )
-        part = part.localCheckpoint(eager=True)
-        bc.destroy()
-        parts.append(part)
-    return _merge_topk_partials(parts, k)
+        return Q, mask
+
+    def score(cid, X, payload):
+        Q, mask = payload
+        code = buckets(X)  # (nb, T)
+        valid = np.zeros((len(Q), len(cid)), dtype=bool)
+        for t in range(n_tables):
+            valid |= mask[:, t, code[:, t]]
+        D = _guarded_matmul(Q, X)
+        D[~valid] = _NEG
+        return D
+
+    return _corpus_topk_pass(corpus, qsrc, k, prepare, score, shard_rows=shard_rows)
 
 
 def ann_lsh_topk(
@@ -1009,16 +954,14 @@ def ann_lsh_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     queries: DataFrame | None = None,
-    kernel_buckets: bool | None = None,
 ) -> DataFrame:
     """Approximate top-k: multi-table multi-probe sign-LSH candidates,
     exact quantized-dot rescore (same kernel/quantization as ``topk_dot``
     so recall is measured apples-to-apples).
 
-    Executes as the masked ``_lsh_topk_kernel`` corpus pass (r8).
-    ``kernel_buckets`` is kept for API compatibility — both the
-    expression-bucket and kernel-bucket variants now run the same masked
-    kernel (bucket parity between the two implementations is pinned in
+    Executes as the masked ``_lsh_topk_kernel`` corpus pass (r8), whose
+    in-task bucket codes are the ``sign_lsh_buckets_kernel`` matmul
+    (bucket parity with the expression form is pinned in
     test_round4_fixes; the join formulation survives as
     ``ann_lsh_topk_join`` and the result is pinned byte-identical)."""
     return _lsh_topk_kernel(
@@ -1222,15 +1165,10 @@ def _lloyd_rounds(corpus, books: dict, iters: int, sd: int) -> dict:
             for pdf in batches:
                 if not len(pdf):
                     continue
-                X = np.array(pdf["__xq"].tolist(), dtype=np.int64)
+                X = _decode_vecs(pdf["__xq"])
                 for s, (cs, C) in bks.items():
                     Xs = X[:, s * sd:(s + 1) * sd]
-                    ds = (
-                        (Xs * Xs).sum(axis=1)[:, None]
-                        - 2 * _guarded_matmul(Xs, C)
-                        + (C * C).sum(axis=1)[None, :]
-                    )
-                    idx = ds.argmin(axis=1)
+                    idx = _nearest_list(Xs, C)
                     t, c = acc[s]
                     np.add.at(t, idx, Xs)
                     np.add.at(c, idx, 1)
@@ -1300,7 +1238,6 @@ def pq_train(
     per round on what is always a tiny aggregate) survives as
     ``pq_train_join``, pytest-pinned byte-identical."""
     import numpy as np
-    import pandas as pd
 
     from .spread import scan_spread
 
@@ -1313,9 +1250,7 @@ def pq_train(
     sd = dim // m
     spark = emb.sparkSession
     corpus = _corpus if _corpus is not None else scan_spread(
-        _quantized_vecs(emb, id_col, vec_col, "__xq").select(
-            F.col(id_col).alias("__cid"), "__xq"
-        )
+        _cid_vecs(emb, id_col, vec_col)
     ).localCheckpoint(eager=True)
     seeds_pdf = (
         corpus.filter(F.col("__cid") < k_codes)
@@ -1323,11 +1258,7 @@ def pq_train(
         .sort_values("__cid", kind="stable")
     )
     codes0 = seeds_pdf["__cid"].to_numpy(np.int64)
-    S0 = (
-        np.array(seeds_pdf["__xq"].tolist(), dtype=np.int64)
-        if len(seeds_pdf)
-        else np.zeros((0, dim), dtype=np.int64)
-    )
+    S0 = _decode_vecs(seeds_pdf["__xq"])
     # {s: (codes sorted asc, C (ks, sd))} — code == seed id, so the
     # code-ascending row order encodes the (distance, code) tie rule
     books = (
@@ -1403,11 +1334,7 @@ def _pq_artifacts(
     formulations still pay the subvector explode + assignment pass."""
     from .spread import scan_spread
 
-    corpus = scan_spread(
-        _quantized_vecs(emb, id_col, vec_col, "__xq").select(
-            F.col(id_col).alias("__cid"), "__xq"
-        )
-    ).localCheckpoint(eager=True)
+    corpus = scan_spread(_cid_vecs(emb, id_col, vec_col)).localCheckpoint(eager=True)
     # the codebook lands driver-side from pq_train's corpus-pass rounds
     # (m x k rows, already materialized as a local-data frame)
     cents = pq_train(emb, m, k_codes, iters, id_col, vec_col, _corpus=corpus)
@@ -1436,7 +1363,7 @@ def _pq_books(cents: DataFrame) -> dict:
     for s, g in pdf.groupby("s", sort=True):
         books[int(s)] = (
             g["code"].to_numpy(np.int64),
-            np.array(g["__cv"].tolist(), dtype=np.int64),
+            _decode_vecs(g["__cv"]),
         )
     return books
 
@@ -1446,14 +1373,10 @@ def _adc_lut(books: dict, Q, sd: int) -> dict:
     exact integer L2 of the query subvector vs every codebook entry}`` —
     the same values as the broadcast ``qd`` frame of the join
     formulation, computed once per query shard."""
-    lut = {}
-    for s, (_codes, C) in books.items():
-        Qs = Q[:, s * sd:(s + 1) * sd]
-        G = _guarded_matmul(Qs, C)
-        lut[s] = (
-            (Qs * Qs).sum(axis=1)[:, None] - 2 * G + (C * C).sum(axis=1)[None, :]
-        )
-    return lut
+    return {
+        s: _sq_dists(Q[:, s * sd:(s + 1) * sd], C)
+        for s, (_codes, C) in books.items()
+    }
 
 
 def _pq_adc_topk_kernel(
@@ -1482,130 +1405,46 @@ def _pq_adc_topk_kernel(
     sf1 before the aggregate); here the same sums are ``m`` fancy-indexed
     adds per batch. Parity with the ``*_join`` references is
     pytest-pinned and the DuckDB oracle gates the registry entries."""
-    import math
-
     import numpy as np
-    import pandas as pd
+
+    from .spread import scan_spread
 
     books = _pq_books(pq_cents)
-    spark = emb.sparkSession
-    if not books:
-        # empty codebook (no seed ids below k_codes): the join form's qd
-        # frame is empty, so the ADC result is too
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, adc long"
-        )
-    sd = next(iter(books.values()))[1].shape[1]
-    dim = sd * max(books) + sd if books else sd
-
-    coarse_ids = None
+    sd = next(iter(books.values()))[1].shape[1] if books else 0
     C_coarse = None
     if coarse_cents is not None:
         c_pdf = coarse_cents.toPandas().sort_values("centroid_id", kind="stable")
         coarse_ids = c_pdf["centroid_id"].to_numpy(np.int64)
-        C_coarse = (
-            np.array(c_pdf["__cv"].tolist(), dtype=np.int64)
-            if len(c_pdf)
-            else np.zeros((0, 1), dtype=np.int64)
-        )
-        if not len(C_coarse):
-            # no coarse lists -> no probes -> no candidates
-            return spark.createDataFrame(
-                [], "query_id long, neighbor_id long, rank int, adc long"
-            )
-
-    from .spread import scan_spread
-
+        C_coarse = _decode_vecs(c_pdf["__cv"])
     corpus = _corpus if _corpus is not None else scan_spread(
-        _quantized_vecs(emb, id_col, vec_col, "__xq").select(
-            F.col(id_col).alias("__cid"), "__xq"
-        )
+        _cid_vecs(emb, id_col, vec_col)
     )
-    qsrc = corpus.filter(F.col("__cid") % 50 == 0)
-    n_q = qsrc.count()
-    n_shards = max(1, math.ceil(n_q / shard_rows))
-    NEG = np.iinfo(np.int64).min
-    sc = spark.sparkContext
 
-    def make_run(bc):
-        def run(batches):
-            qids, lut, mask = bc.value
-            nq = len(qids)
-            for pdf in batches:
-                nb = len(pdf)
-                if nb == 0 or nq == 0:
-                    continue
-                cid = pdf["__cid"].to_numpy(np.int64)
-                X = np.array(pdf["__xq"].tolist(), dtype=np.int64)
-                adc = np.zeros((nq, nb), dtype=np.int64)
-                for s, (_codes, C) in books.items():
-                    Xs = X[:, s * sd:(s + 1) * sd]
-                    ds = (
-                        (Xs * Xs).sum(axis=1)[:, None]
-                        - 2 * _guarded_matmul(Xs, C)
-                        + (C * C).sum(axis=1)[None, :]
-                    )
-                    adc += lut[s][:, ds.argmin(axis=1)]
-                D = -adc
-                if mask is not None:
-                    # nearest coarse list per corpus vector (first-minimum
-                    # over the centroid_id-sorted C == struct-min tie rule)
-                    G = _guarded_matmul(X, C_coarse)
-                    d2 = (
-                        (X * X).sum(axis=1)[:, None]
-                        - 2 * G
-                        + (C_coarse * C_coarse).sum(axis=1)[None, :]
-                    )
-                    D[~mask[:, d2.argmin(axis=1)]] = NEG
-                D[qids[:, None] == cid[None, :]] = NEG  # never match self
-                got = _np_partial_topk(D, qids, cid, k, NEG)
-                if got is None:
-                    continue
-                yield pd.DataFrame(
-                    {"query_id": got[0], "neighbor_id": got[1], "dot": got[2]}
-                )
+    def prepare(qids, Q):
+        # an empty codebook (no seed ids below k_codes) empties the join
+        # form's qd frame, and no coarse lists means no probes: either
+        # way there is no candidate
+        if not books or (C_coarse is not None and not len(C_coarse)):
+            return None
+        mask = None if C_coarse is None else _probe_mask(
+            Q, C_coarse, coarse_ids, nprobe
+        )
+        return _adc_lut(books, Q, sd), mask
 
-        return run
+    def score(cid, X, payload):
+        lut, mask = payload
+        D = -sum(
+            lut[s][:, _nearest_list(X[:, s * sd:(s + 1) * sd], C)]
+            for s, (_codes, C) in books.items()
+        )
+        if mask is not None:
+            D[~mask[:, _nearest_list(X, C_coarse)]] = _NEG
+        return D
 
-    parts = []
-    for s in range(n_shards):
-        shard = qsrc if n_shards == 1 else qsrc.filter(
-            F.pmod(F.col("__cid"), F.lit(n_shards)) == s
-        )
-        q_pdf = shard.toPandas().sort_values("__cid", kind="stable")
-        qids = q_pdf["__cid"].to_numpy(np.int64)
-        Q = (
-            np.array(q_pdf["__xq"].tolist(), dtype=np.int64)
-            if len(q_pdf)
-            else np.zeros((0, dim), dtype=np.int64)
-        )
-        lut = (
-            _adc_lut(books, Q, sd)
-            if len(qids)
-            else {s: np.zeros((0, len(cs)), dtype=np.int64) for s, (cs, _C) in books.items()}
-        )
-        mask = None
-        if C_coarse is not None:
-            # probe mask: row_number over (l2 asc, centroid_id asc) <= nprobe
-            mask = np.zeros((len(qids), len(coarse_ids)), dtype=bool)
-            if len(qids):
-                Gq = _guarded_matmul(Q, C_coarse)
-                d2q = (
-                    (Q * Q).sum(axis=1)[:, None]
-                    - 2 * Gq
-                    + (C_coarse * C_coarse).sum(axis=1)[None, :]
-                )
-                npb = min(nprobe, len(coarse_ids))
-                for i in range(len(qids)):
-                    mask[i, np.lexsort((coarse_ids, d2q[i]))[:npb]] = True
-        bc = sc.broadcast((qids, lut, mask))
-        part = corpus.mapInPandas(
-            make_run(bc), schema="query_id long, neighbor_id long, dot long"
-        )
-        part = part.localCheckpoint(eager=True)
-        bc.destroy()
-        parts.append(part)
-    return _merge_topk_partials(parts, k, out_col="adc", negate=True)
+    return _corpus_topk_pass(
+        corpus, corpus.filter(F.col("__cid") % 50 == 0), k, prepare, score,
+        out_col="adc", negate=True, shard_rows=shard_rows,
+    )
 
 
 def _rescore_shortlist_kernel(
@@ -1619,80 +1458,42 @@ def _rescore_shortlist_kernel(
 ) -> DataFrame:
     """Exact quantized-dot re-ranking of a per-query shortlist via ONE
     corpus pass: the (query_id, neighbor_id) shortlist (|queries| x
-    shortlist rows — always bounded) and the query vectors ride a
-    broadcast; each batch computes the masked dot matrix and emits only
-    shortlist pairs into the global (dot desc, id asc) merge. Replaces
-    the two vector re-attach joins + per-pair zip_with aggregate of the
-    join formulation — same values, no corpus shuffle."""
+    shortlist rows — always bounded) and the query vectors ride the
+    shared ``_corpus_topk_pass`` broadcast; each batch computes the dot
+    matrix masked to the shortlist pairs. Replaces the two vector
+    re-attach joins + per-pair zip_with aggregate of the join
+    formulation — same values, no corpus shuffle. Shortlists never hold
+    the query itself, so the pass's self mask removes nothing here."""
     import numpy as np
-    import pandas as pd
 
     from .spread import scan_spread
 
     pairs = short.select("query_id", "neighbor_id").toPandas()
+    pair_q = pairs["query_id"].to_numpy(np.int64)
+    pair_n = pairs["neighbor_id"].to_numpy(np.int64)
     corpus = _corpus if _corpus is not None else scan_spread(
-        _quantized_vecs(emb, id_col, vec_col, "__xq").select(
-            F.col(id_col).alias("__cid"), "__xq"
-        )
+        _cid_vecs(emb, id_col, vec_col)
     )
-    q_pdf = (
-        corpus.filter(F.col("__cid").isin([int(q) for q in set(pairs["query_id"])]))
-        .toPandas()
-        .sort_values("__cid", kind="stable")
-        if len(pairs)
-        else None
-    )
-    if q_pdf is None or not len(q_pdf):
-        return _merge_topk_partials(
-            [
-                emb.sparkSession.createDataFrame(
-                    [], "query_id long, neighbor_id long, dot long"
-                )
-            ],
-            k,
-            out_col=out_col,
-        )
-    qids = q_pdf["__cid"].to_numpy(np.int64)
-    Q = np.array(q_pdf["__xq"].tolist(), dtype=np.int64)
-    qrow = {int(q): i for i, q in enumerate(qids)}
-    by_nbr: dict[int, list[int]] = {}
-    for q, n in zip(pairs["query_id"], pairs["neighbor_id"]):
-        by_nbr.setdefault(int(n), []).append(qrow[int(q)])
-    by_nbr_np = {n: np.asarray(rs, dtype=np.int64) for n, rs in by_nbr.items()}
-    sc = emb.sparkSession.sparkContext
-    bc = sc.broadcast((qids, Q, by_nbr_np))
+    qsrc = corpus.filter(F.col("__cid").isin(sorted({int(q) for q in pair_q})))
 
-    def run(batches):
-        qids, Q, by_nbr = bc.value
-        for pdf in batches:
-            nb = len(pdf)
-            if nb == 0:
-                continue
-            cid = pdf["__cid"].to_numpy(np.int64)
-            hit = [j for j in range(nb) if int(cid[j]) in by_nbr]
-            if not hit:
-                continue
-            X = np.array(pdf["__xq"].to_numpy()[hit].tolist(), dtype=np.int64)
-            D = _guarded_matmul(Q, X)
-            out_q, out_n, out_d = [], [], []
-            for jj, j in enumerate(hit):
-                rows = by_nbr[int(cid[j])]
-                out_q.append(qids[rows])
-                out_n.append(np.full(len(rows), cid[j], dtype=np.int64))
-                out_d.append(D[rows, jj])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "dot": np.concatenate(out_d),
-                }
-            )
+    def prepare(qids, Q):
+        # the shard's shortlist as (query row, neighbor id) pairs
+        keep = np.isin(pair_q, qids)
+        return Q, np.searchsorted(qids, pair_q[keep]), pair_n[keep]
 
-    part = corpus.mapInPandas(
-        run, schema="query_id long, neighbor_id long, dot long"
-    ).localCheckpoint(eager=True)
-    bc.destroy()
-    return _merge_topk_partials([part], k, out_col=out_col)
+    def score(cid, X, payload):
+        Q, rows, nbrs = payload
+        # batch column of each shortlisted neighbor (corpus ids are unique)
+        order = np.argsort(cid)
+        col = order[np.searchsorted(cid, nbrs, sorter=order).clip(max=len(cid) - 1)]
+        hit = cid[col] == nbrs
+        valid = np.zeros((len(Q), len(cid)), dtype=bool)
+        valid[rows[hit], col[hit]] = True
+        D = _guarded_matmul(Q, X)
+        D[~valid] = _NEG
+        return D
+
+    return _corpus_topk_pass(corpus, qsrc, k, prepare, score, out_col=out_col)
 
 
 def pq_encode(
@@ -1923,87 +1724,32 @@ def sq8_ann_topk(
     |corpus| x |queries| x dim joined rows — 512 M at sf1. Integer
     divisions are floor-exact in both paths: operands are non-negative
     and quotients sit far from representable-double boundaries."""
-    import math
-
     import numpy as np
-    import pandas as pd
-
-    flat = _sq8_flat(emb, id_col, vec_col)
-    stats_pdf = _sq8_stats(flat).toPandas().sort_values("d", kind="stable")
-    spark = emb.sparkSession
-    if not len(stats_pdf):
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, adist long"
-        )
-    dim = int(stats_pdf["d"].max()) + 1
-    mn = np.zeros(dim, dtype=np.int64)
-    span = np.ones(dim, dtype=np.int64)
-    mn[stats_pdf["d"].to_numpy(np.int64)] = stats_pdf["mn"].to_numpy(np.int64)
-    span[stats_pdf["d"].to_numpy(np.int64)] = stats_pdf["span"].to_numpy(np.int64)
 
     from .spread import scan_spread
 
-    corpus = scan_spread(
-        _quantized_vecs(emb, id_col, vec_col, "__xq").select(
-            F.col(id_col).alias("__cid"), "__xq"
-        )
+    flat = _sq8_flat(emb, id_col, vec_col)
+    stats_pdf = _sq8_stats(flat).toPandas().sort_values("d", kind="stable")
+    d = stats_pdf["d"].to_numpy(np.int64)
+    dim = int(d.max(initial=-1)) + 1
+    mn = np.zeros(dim, dtype=np.int64)
+    span = np.ones(dim, dtype=np.int64)
+    mn[d] = stats_pdf["mn"].to_numpy(np.int64)
+    span[d] = stats_pdf["span"].to_numpy(np.int64)
+    corpus = scan_spread(_cid_vecs(emb, id_col, vec_col))
+
+    def score(cid, X, Q):
+        # encode -> decode round-trip, exactly the join form's
+        # integer expressions (non-negative floor divisions)
+        code = ((X - mn[None, :]) * 255) // span[None, :]
+        dq = mn[None, :] + (code * span[None, :]) // 255
+        return -_sq_dists(Q, dq)
+
+    return _corpus_topk_pass(
+        corpus, corpus.filter(F.col("__cid") % 50 == 0), k,
+        lambda qids, Q: Q, score,
+        out_col="adist", negate=True, shard_rows=shard_rows,
     )
-    qsrc = corpus.filter(F.col("__cid") % 50 == 0)
-    n_q = qsrc.count()
-    n_shards = max(1, math.ceil(n_q / shard_rows))
-    NEG = np.iinfo(np.int64).min
-    sc = spark.sparkContext
-
-    def make_run(bc):
-        def run(batches):
-            qids, Q = bc.value
-            nq = len(qids)
-            for pdf in batches:
-                nb = len(pdf)
-                if nb == 0 or nq == 0:
-                    continue
-                cid = pdf["__cid"].to_numpy(np.int64)
-                X = np.array(pdf["__xq"].tolist(), dtype=np.int64)
-                # encode -> decode round-trip, exactly the join form's
-                # integer expressions (non-negative floor divisions)
-                code = ((X - mn[None, :]) * 255) // span[None, :]
-                dq = mn[None, :] + (code * span[None, :]) // 255
-                d2 = (
-                    (Q * Q).sum(axis=1)[:, None]
-                    - 2 * _guarded_matmul(Q, dq)
-                    + (dq * dq).sum(axis=1)[None, :]
-                )
-                D = -d2
-                D[qids[:, None] == cid[None, :]] = NEG  # never match self
-                got = _np_partial_topk(D, qids, cid, k, NEG)
-                if got is None:
-                    continue
-                yield pd.DataFrame(
-                    {"query_id": got[0], "neighbor_id": got[1], "dot": got[2]}
-                )
-
-        return run
-
-    parts = []
-    for s in range(n_shards):
-        shard = qsrc if n_shards == 1 else qsrc.filter(
-            F.pmod(F.col("__cid"), F.lit(n_shards)) == s
-        )
-        q_pdf = shard.toPandas().sort_values("__cid", kind="stable")
-        qids = q_pdf["__cid"].to_numpy(np.int64)
-        Q = (
-            np.array(q_pdf["__xq"].tolist(), dtype=np.int64)
-            if len(q_pdf)
-            else np.zeros((0, dim), dtype=np.int64)
-        )
-        bc = sc.broadcast((qids, Q))
-        part = corpus.mapInPandas(
-            make_run(bc), schema="query_id long, neighbor_id long, dot long"
-        )
-        part = part.localCheckpoint(eager=True)
-        bc.destroy()
-        parts.append(part)
-    return _merge_topk_partials(parts, k, out_col="adist", negate=True)
 
 
 def sq8_ann_topk_join(

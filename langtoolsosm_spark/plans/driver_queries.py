@@ -2943,16 +2943,15 @@ O_PII_REDACT = _o_pii_redact()
 
 def q_embedding_lsh_ann_kernel(spark, sf_dir):
     """Driver gate for the broadcast-matrix LSH bucket kernel
-    (operators/similarity.py:sign_lsh_buckets_kernel): same ANN query as
-    ``embedding_lsh_ann`` with ``kernel_buckets=True``, so the scale path
-    for high embedding dims (plan stays O(1) in dim instead of carrying
-    n_tables x n_bits x dim sign literals) is itself oracle-checked, not
-    just parity-tested against the expression form."""
+    (operators/similarity.py:sign_lsh_buckets_kernel): the same ANN query
+    as ``embedding_lsh_ann``. ``ann_lsh_topk`` derives its bucket codes
+    with that kernel's matmul in-task, so the scale path for high
+    embedding dims (no n_tables x n_bits x dim sign literals in the plan)
+    is itself oracle-checked, not just parity-tested against the
+    expression form."""
     from ..operators.similarity import ann_lsh_topk
 
-    return ann_lsh_topk(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), kernel_buckets=True
-    )
+    return ann_lsh_topk(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
 
 
 def q_embedding_topk_sharded(spark, sf_dir):

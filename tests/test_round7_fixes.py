@@ -58,7 +58,7 @@ def clustered_recalls(spark):
         return hit / n_true
 
     out = {
-        "lsh_kernel": recall(ann_lsh_topk(emb, kernel_buckets=True)),
+        "lsh_kernel": recall(ann_lsh_topk(emb)),
         "ivf": recall(ivf_ann_topk(emb)),
         "ivf_lloyd": recall(ivf_lloyd_ann_topk(emb)),
         "pq_adc": recall(pq_ann_topk(emb)),

@@ -69,10 +69,13 @@ def test_lsh_kernel_nondefault_params(spark, emb):
 
 def test_ivf_kernel_sharded_queries(spark, emb):
     """Tiny shard_rows forces the multi-broadcast sharded query path —
-    must be byte-identical to the single-shard answer."""
+    must be byte-identical to the single-shard answer. The LSH kernel's
+    masked-dot pass is pinned the same way."""
     from langtoolsosm_spark.operators.similarity import (
         _ivf_topk_kernel,
+        _lsh_topk_kernel,
         _quantized_vecs,
+        ann_lsh_topk,
         ivf_ann_topk,
     )
 
@@ -83,6 +86,14 @@ def test_ivf_kernel_sharded_queries(spark, emb):
         _ivf_topk_kernel(emb, cents, 5, 8, "vec_id", "embedding", shard_rows=3)
     )
     exp = _sorted_pdf(ivf_ann_topk(emb))
+    assert got.equals(exp) and len(got) > 0
+
+    got = _sorted_pdf(
+        _lsh_topk_kernel(
+            emb, None, 5, 4, 6, 2, 64, "vec_id", "embedding", shard_rows=3
+        )
+    )
+    exp = _sorted_pdf(ann_lsh_topk(emb))
     assert got.equals(exp) and len(got) > 0
 
 
@@ -271,11 +282,13 @@ def test_pq_kernel_nondefault_geometry(spark, emb):
 
 def test_pq_adc_kernel_sharded_queries(spark, emb):
     """Tiny shard_rows forces the multi-broadcast sharded query path of
-    the ADC kernel — must be byte-identical to the single-shard answer."""
+    the ADC kernel — must be byte-identical to the single-shard answer.
+    The SQ8 kernel's negated-distance pass is pinned the same way."""
     from langtoolsosm_spark.operators.similarity import (
         _pq_adc_topk_kernel,
         _pq_artifacts,
         pq_ann_topk,
+        sq8_ann_topk,
     )
 
     _sub, cents, _codes = _pq_artifacts(
@@ -286,6 +299,68 @@ def test_pq_adc_kernel_sharded_queries(spark, emb):
     )
     exp = _sorted_pdf(pq_ann_topk(emb))
     assert got.equals(exp) and len(got) > 0
+
+    got = _sorted_pdf(sq8_ann_topk(emb, shard_rows=3))
+    exp = _sorted_pdf(sq8_ann_topk(emb))
+    assert got.equals(exp) and len(got) > 0
+
+
+def test_corpus_pass_zero_queries(spark):
+    """With no query (no vec_id % 50 == 0 in the corpus, or an empty
+    ``queries`` frame) every kernel family returns 0 rows with its
+    declared schema — the shared corpus pass's empty path."""
+    import pandas as pd
+
+    from langtoolsosm_spark.operators.similarity import (
+        ann_lsh_topk,
+        ivf_ann_topk,
+        ivf_pq_ann_topk,
+        pq_ann_rescored,
+        pq_ann_topk,
+        sq8_ann_topk,
+        topk_dot_kernel,
+    )
+
+    corpus = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "vec_id": range(1, 50),
+                "embedding": [
+                    [((i * 7 + d * 5) % 13 - 6) / 6.0 for d in range(16)]
+                    for i in range(1, 50)
+                ],
+            }
+        )
+    )
+    no_queries = corpus.limit(0)
+
+    def schema(df):
+        return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+    def head(metric):
+        return [
+            ("query_id", "bigint"), ("neighbor_id", "bigint"),
+            ("rank", "int"), (metric, "bigint"),
+        ]
+
+    pq = dict(m=4, k_codes=8, iters=1)
+    cases = {
+        "topk_dot_kernel": (topk_dot_kernel(corpus), "dot"),
+        "topk_dot_kernel(queries=empty)": (
+            topk_dot_kernel(corpus, queries=no_queries), "dot"
+        ),
+        "ivf_ann_topk": (ivf_ann_topk(corpus, n_centroids=8, nprobe=2), "dot"),
+        "ann_lsh_topk": (ann_lsh_topk(corpus, dim=16), "dot"),
+        "pq_ann_topk": (pq_ann_topk(corpus, **pq), "adc"),
+        "pq_ann_rescored": (pq_ann_rescored(corpus, **pq), "dot"),
+        "sq8_ann_topk": (sq8_ann_topk(corpus), "adist"),
+        "ivf_pq_ann_topk": (
+            ivf_pq_ann_topk(corpus, n_centroids=8, nprobe=2, **pq), "adc"
+        ),
+    }
+    for name, (df, metric) in cases.items():
+        assert schema(df) == head(metric), name
+        assert df.count() == 0, name
 
 
 def test_pq_train_kernel_matches_join(spark, emb):
