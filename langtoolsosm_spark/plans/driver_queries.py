@@ -3097,6 +3097,55 @@ def q_snapshot_expire(spark, sf_dir):
     return result
 
 
+def _stream_pdf(df, *keys):
+    """``df`` collected to pandas and sorted by ``keys`` for file staging,
+    with ``ts`` (when present) cast to microseconds: Spark cannot read
+    pandas' default TIMESTAMP(NANOS) parquet."""
+    pdf = df.toPandas().sort_values(list(keys), kind="mergesort")
+    if "ts" in pdf:
+        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+    return pdf
+
+
+def _thirds(pdf, interleaved=False):
+    """Three staging frames: contiguous slices (time-ordered micro-batches,
+    the ordered-ingestion contract), or rank-interleaved — batch i holds
+    ranks i, i+3, i+6, ... — for maximal cross-batch disorder."""
+    if interleaved:
+        return [pdf.iloc[i::3] for i in range(3)]
+    n = len(pdf)
+    return [pdf.iloc[i * n // 3 : (i + 1) * n // 3] for i in range(3)]
+
+
+def _run_staged_stream(frames, run):
+    """Stage ``frames`` as a stream source directory, return
+    ``run(src, ckpt)`` pinned with an eager ``localCheckpoint`` (it must
+    outlive the staging), and remove the staging tempdir — source,
+    checkpoint and any sink under it — in ``finally``.
+
+    A list of pandas frames is written as ``b{i}.parquet`` with mtime
+    ``1000 * (i + 1)``: the file source orders files by mtime, so list
+    order is trigger order. A Spark DataFrame is written as 3 files by
+    ``repartition(3)``, in no fixed order (for order-free kernels)."""
+    import shutil
+    import tempfile
+
+    out = tempfile.mkdtemp(prefix="stream_")
+    try:
+        src = os.path.join(out, "src")
+        if isinstance(frames, DataFrame):
+            frames.repartition(3).write.parquet(src)
+        else:
+            os.makedirs(src)
+            for i, pdf in enumerate(frames):
+                p = os.path.join(src, f"b{i}.parquet")
+                pdf.to_parquet(p, index=False)
+                os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
+        return run(src, os.path.join(out, "ckpt")).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
 def q_stream_dedup(spark, sf_dir):
     """Batch-parity gate for ``stream_dedup_exact``
     (streaming/microbatch.py): the events table staged as 3 parquet files
@@ -3108,28 +3157,20 @@ def q_stream_dedup(spark, sf_dir):
     and hash-mismatches. Keys-only projection keeps the check
     deterministic (which duplicate survives within a batch is partition-
     order dependent; the key set is not)."""
-    import shutil
-    import tempfile
-
     from ..streaming.microbatch import run_dedup_exact_once
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    out = tempfile.mkdtemp(prefix="streamdedup_")
-    try:
-        src = os.path.join(out, "src")
-        ev.repartition(3).write.parquet(src)
-        emitted = run_dedup_exact_once(
+    return _run_staged_stream(
+        ev,
+        lambda src, ckpt: run_dedup_exact_once(
             spark,
             src,
-            os.path.join(out, "ckpt"),
-            os.path.join(out, "sink"),
+            ckpt,
+            f"{ckpt}_sink",  # inside the same staging tempdir
             key_cols=["user_id", "event_type"],
             watermark="36500 days",
-        )
-        result = emitted.select("user_id", "event_type").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return result
+        ).select("user_id", "event_type"),
+    )
 
 
 O_STREAM_DEDUP = "SELECT DISTINCT user_id, event_type FROM events"
@@ -3412,22 +3453,14 @@ def q_stream_heatmap(spark, sf_dir):
     point fixture staged as 3 parquet files feeds 3 micro-batches
     through the stateful pixel histogram; the final state's per-tile
     rollup must equal the batch ``heatmap_stats`` oracle exactly."""
-    import shutil
-    import tempfile
-
     from ..streaming.microbatch import run_heatmap_stream_once
 
-    pts = geo_points(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="streamheat_")
-    try:
-        src = os.path.join(out, "src")
-        pts.repartition(3).write.parquet(src)
-        result = run_heatmap_stream_once(
-            spark, src, os.path.join(out, "ckpt"), res=7, tile_px=64
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return result
+    return _run_staged_stream(
+        geo_points(spark, sf_dir),
+        lambda src, ckpt: run_heatmap_stream_once(
+            spark, src, ckpt, res=7, tile_px=64
+        ),
+    )
 
 
 def q_polygon_area(spark, sf_dir):
@@ -4669,10 +4702,6 @@ def q_stream_od(spark, sf_dir):
     contract; mtime fixes trigger order), fed one file per micro-batch;
     the rolled-up flows must equal the batch ``od_flows`` oracle
     exactly."""
-    import os as _os
-    import shutil
-    import tempfile
-
     from ..streaming.microbatch import run_od_stream_once
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -4681,24 +4710,10 @@ def q_stream_od(spark, sf_dir):
         f"SELECT user_id, ts, event_id, {TRAJ_LAT_SQL} AS lat, "
         f"{TRAJ_LON_SQL} AS lon FROM __sod_events"
     )
-    out = tempfile.mkdtemp(prefix="streamod_")
-    try:
-        src = _os.path.join(out, "src")
-        _os.makedirs(src)
-        pdf = t.toPandas().sort_values(["ts", "event_id"], kind="mergesort")
-        # Spark cannot read pandas' default TIMESTAMP(NANOS) parquet
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        n = len(pdf)
-        for i in range(3):
-            p = _os.path.join(src, f"b{i}.parquet")
-            pdf.iloc[i * n // 3 : (i + 1) * n // 3].to_parquet(p, index=False)
-            _os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
-        result = run_od_stream_once(
-            spark, src, _os.path.join(out, "ckpt"), res=8
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return result
+    return _run_staged_stream(
+        _thirds(_stream_pdf(t, "ts", "event_id")),
+        lambda src, ckpt: run_od_stream_once(spark, src, ckpt, res=8),
+    )
 
 
 REGISTRY.update({"stream_od": (q_stream_od, O_OD_FLOWS)})
@@ -4715,10 +4730,6 @@ def q_stream_od_late(spark, sf_dir):
     event-time order, and the rolled-up flows must STILL equal the batch
     ``od_flows`` oracle exactly. The ordered-ingestion kernel
     (stream_od) raises on this staging; this one absorbs it."""
-    import os as _os
-    import shutil
-    import tempfile
-
     import numpy as _np
     import pandas as _pd
 
@@ -4730,40 +4741,27 @@ def q_stream_od_late(spark, sf_dir):
         f"SELECT user_id, ts, event_id, {TRAJ_LAT_SQL} AS lat, "
         f"{TRAJ_LON_SQL} AS lon FROM __sodl_events"
     )
-    out = tempfile.mkdtemp(prefix="streamodlate_")
-    try:
-        src = _os.path.join(out, "src")
-        _os.makedirs(src)
-        pdf = t.toPandas().sort_values(["ts", "event_id"], kind="mergesort")
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        span_s = int(
-            (pdf["ts"].max() - pdf["ts"].min()).total_seconds()
-        ) + 1
-        for i in range(3):
-            p = _os.path.join(src, f"b{i}.parquet")
-            # rank-interleaved: batch i holds ranks i, i+3, i+6, ...
-            pdf.iloc[i::3].to_parquet(p, index=False)
-            _os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
-        flush = _pd.DataFrame(
-            {
-                "user_id": pdf["user_id"].unique(),
-                "ts": pdf["ts"].max() + _pd.Timedelta(seconds=2 * span_s),
-                "event_id": -1,
-                "lat": _np.nan,
-                "lon": _np.nan,
-            }
-        )
-        flush["ts"] = flush["ts"].astype("datetime64[us]")
-        p = _os.path.join(src, "b3_flush.parquet")
-        flush.to_parquet(p, index=False)
-        _os.utime(p, (4000, 4000))
-        result = run_od_late_stream_once(
-            spark, src, _os.path.join(out, "ckpt"),
-            res=8, lateness_s=span_s,
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return result
+    pdf = _stream_pdf(t, "ts", "event_id")
+    span_s = int(
+        (pdf["ts"].max() - pdf["ts"].min()).total_seconds()
+    ) + 1
+    flush = _pd.DataFrame(
+        {
+            "user_id": pdf["user_id"].unique(),
+            "ts": pdf["ts"].max() + _pd.Timedelta(seconds=2 * span_s),
+            "event_id": -1,
+            "lat": _np.nan,
+            "lon": _np.nan,
+        }
+    )
+    flush["ts"] = flush["ts"].astype("datetime64[us]")
+    return _run_staged_stream(
+        # the punctuation flush is the fourth and last file (mtime 4000)
+        _thirds(pdf, interleaved=True) + [flush],
+        lambda src, ckpt: run_od_late_stream_once(
+            spark, src, ckpt, res=8, lateness_s=span_s
+        ),
+    )
 
 
 REGISTRY.update({"stream_od_late": (q_stream_od_late, O_OD_FLOWS)})
@@ -5047,10 +5045,6 @@ def q_stream_geofence(spark, sf_dir):
     time-ordered staged files, per-entity zone state across batches, the
     same ray-cast kernel as the batch PIP join; the emitted transition
     log must equal the batch geofence oracle exactly."""
-    import os as _os
-    import shutil
-    import tempfile
-
     import numpy as _np
 
     from ..streaming.microbatch import run_geofence_stream_once
@@ -5062,23 +5056,10 @@ def q_stream_geofence(spark, sf_dir):
         f"{TRAJ_LON_SQL} AS lon FROM __sgf_events"
     )
     rings = {pid: _np.asarray(ring, dtype=float) for pid, ring in GEO_POLYGONS}
-    out = tempfile.mkdtemp(prefix="streamgf_")
-    try:
-        src = _os.path.join(out, "src")
-        _os.makedirs(src)
-        pdf = t.toPandas().sort_values(["ts", "event_id"], kind="mergesort")
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        n = len(pdf)
-        for i in range(3):
-            p = _os.path.join(src, f"b{i}.parquet")
-            pdf.iloc[i * n // 3 : (i + 1) * n // 3].to_parquet(p, index=False)
-            _os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
-        result = run_geofence_stream_once(
-            spark, src, _os.path.join(out, "ckpt"), rings
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return result
+    return _run_staged_stream(
+        _thirds(_stream_pdf(t, "ts", "event_id")),
+        lambda src, ckpt: run_geofence_stream_once(spark, src, ckpt, rings),
+    )
 
 
 REGISTRY.update({"stream_geofence": (q_stream_geofence, O_GEOFENCE)})
@@ -6429,9 +6410,6 @@ def q_stream_decayed_heatmap(spark, sf_dir):
     power-of-two weights); the final state must equal the batch
     ``decayed_tiles`` oracle exactly — same oracle SQL as
     decayed_heatmap."""
-    import shutil
-    import tempfile
-
     from ..streaming.microbatch import run_decayed_stream_once
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -6440,18 +6418,14 @@ def q_stream_decayed_heatmap(spark, sf_dir):
         f"SELECT ts, {TRAJ_LAT_SQL} AS lat, {TRAJ_LON_SQL} AS lon "
         "FROM __sdecay_events"
     )
-    out = tempfile.mkdtemp(prefix="streamdecay_")
-    try:
-        src = os.path.join(out, "src")
-        t.repartition(3).write.parquet(src)
-        result = run_decayed_stream_once(
-            spark, src, os.path.join(out, "ckpt"),
+    return _run_staged_stream(
+        t,
+        lambda src, ckpt: run_decayed_stream_once(
+            spark, src, ckpt,
             res=DECAY_RES, anchor_epoch=DECAY_ANCHOR,
             halflife_s=DECAY_HALFLIFE,
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return result
+        ),
+    )
 
 
 REGISTRY.update({
@@ -7120,22 +7094,12 @@ def q_stream_tile_cap(spark, sf_dir):
     staged as 3 micro-batches through the monotone bounded reservoir
     (state <= cap (hash, id) pairs per tile); the flattened final state
     must equal batch tile_cap_sample — same oracle SQL."""
-    import shutil
-    import tempfile
-
     from ..streaming.microbatch import run_tile_cap_stream_once
 
-    pts = geo_points(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="streamcap_")
-    try:
-        src_dir = os.path.join(out, "src")
-        pts.repartition(3).write.parquet(src_dir)
-        result = run_tile_cap_stream_once(
-            spark, src_dir, os.path.join(out, "ckpt"), res=8, cap=3
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return result
+    return _run_staged_stream(
+        geo_points(spark, sf_dir),
+        lambda src, ckpt: run_tile_cap_stream_once(spark, src, ckpt, res=8, cap=3),
+    )
 
 
 REGISTRY.update({"stream_tile_cap": (q_stream_tile_cap, O_TILE_CAP)})
@@ -8183,29 +8147,15 @@ def q_stream_tile_first_seen(spark, sf_dir):
     disorder — min/distinct/count are order-free, so no ordering
     contract is needed); final per-tile state must equal batch
     ``tile_first_seen`` exactly — same oracle SQL."""
-    import os as _os
-    import shutil
-    import tempfile
-
     from ..streaming.microbatch import run_tile_first_seen_stream_once
 
     t = _traj(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="streamfseen_")
-    try:
-        src = _os.path.join(out, "src")
-        _os.makedirs(src)
-        pdf = t.toPandas().sort_values(["ts", "event_id"], kind="mergesort")
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        for i in range(3):
-            p = _os.path.join(src, f"b{i}.parquet")
-            pdf.iloc[i::3].to_parquet(p, index=False)
-            _os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
-        result = run_tile_first_seen_stream_once(
-            spark, src, _os.path.join(out, "ckpt"), res=DWELL_RES
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return result
+    return _run_staged_stream(
+        _thirds(_stream_pdf(t, "ts", "event_id"), interleaved=True),
+        lambda src, ckpt: run_tile_first_seen_stream_once(
+            spark, src, ckpt, res=DWELL_RES
+        ),
+    )
 
 
 REGISTRY.update(
@@ -8332,29 +8282,13 @@ def q_stream_gyration(spark, sf_dir):
     interleaved maximal-disorder staging — moment sums are order-free,
     so the final per-entity state finished with the batch DECIMAL
     algebra must equal ``radius_of_gyration`` exactly (same oracle)."""
-    import os as _os
-    import shutil
-    import tempfile
-
     from ..streaming.microbatch import run_gyration_stream_once
 
     t = _traj(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="streamgyr_")
-    try:
-        src = _os.path.join(out, "src")
-        _os.makedirs(src)
-        pdf = t.toPandas().sort_values(["ts", "event_id"], kind="mergesort")
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        for i in range(3):
-            p = _os.path.join(src, f"b{i}.parquet")
-            pdf.iloc[i::3].to_parquet(p, index=False)
-            _os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
-        result = run_gyration_stream_once(
-            spark, src, _os.path.join(out, "ckpt")
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return result
+    return _run_staged_stream(
+        _thirds(_stream_pdf(t, "ts", "event_id"), interleaved=True),
+        lambda src, ckpt: run_gyration_stream_once(spark, src, ckpt),
+    )
 
 
 REGISTRY.update({"stream_gyration": (q_stream_gyration, O_RADIUS_GYRATION)})
@@ -9161,31 +9095,15 @@ def q_stream_staypoints(spark, sf_dir):
     final open segment is finished like the batch walk's trailing
     segment — gated against the SAME recursive-CTE oracle as batch
     ``staypoints``."""
-    import os as _os
-    import shutil
-    import tempfile
-
     from ..streaming.microbatch import run_staypoints_stream_once
 
     t = _traj(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="streamstay_")
-    try:
-        src = _os.path.join(out, "src")
-        _os.makedirs(src)
-        pdf = t.toPandas().sort_values(["ts", "event_id"], kind="mergesort")
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        n = len(pdf)
-        for i in range(3):
-            p = _os.path.join(src, f"b{i}.parquet")
-            pdf.iloc[i * n // 3 : (i + 1) * n // 3].to_parquet(p, index=False)
-            _os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
-        result = run_staypoints_stream_once(
-            spark, src, _os.path.join(out, "ckpt"),
-            dist_micro=SP_DIST, min_stay_s=SP_STAY,
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return result
+    return _run_staged_stream(
+        _thirds(_stream_pdf(t, "ts", "event_id")),
+        lambda src, ckpt: run_staypoints_stream_once(
+            spark, src, ckpt, dist_micro=SP_DIST, min_stay_s=SP_STAY
+        ),
+    )
 
 
 REGISTRY.update({"stream_staypoints": (q_stream_staypoints, O_STAYPOINTS)})
@@ -9564,30 +9482,13 @@ def q_stream_dwell(spark, sf_dir):
     fixes trigger order); each segment emits exactly once when its
     closing event arrives, the post-stream rollup is gated against the
     SAME oracle as batch ``dwell_time``."""
-    import os as _os
-    import shutil
-    import tempfile
-
     from ..streaming.microbatch import run_dwell_stream_once
 
     t = _traj(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="streamdwell_")
-    try:
-        src = _os.path.join(out, "src")
-        _os.makedirs(src)
-        pdf = t.toPandas().sort_values(["ts", "event_id"], kind="mergesort")
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        n = len(pdf)
-        for i in range(3):
-            p = _os.path.join(src, f"b{i}.parquet")
-            pdf.iloc[i * n // 3 : (i + 1) * n // 3].to_parquet(p, index=False)
-            _os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
-        result = run_dwell_stream_once(
-            spark, src, _os.path.join(out, "ckpt"), res=DWELL_RES
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return result
+    return _run_staged_stream(
+        _thirds(_stream_pdf(t, "ts", "event_id")),
+        lambda src, ckpt: run_dwell_stream_once(spark, src, ckpt, res=DWELL_RES),
+    )
 
 
 REGISTRY.update({"stream_dwell": (q_stream_dwell, O_DWELL_TIME)})
@@ -9785,30 +9686,13 @@ def q_stream_wait_time(spark, sf_dir):
     gap emits exactly once when its closing event arrives, the
     post-stream bucket rollup is gated against the SAME oracle as batch
     ``wait_time_hist``."""
-    import os as _os
-    import shutil
-    import tempfile
-
     from ..streaming.microbatch import run_wait_time_stream_once
 
     t = _traj(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="streamwait_")
-    try:
-        src = _os.path.join(out, "src")
-        _os.makedirs(src)
-        pdf = t.toPandas().sort_values(["ts", "event_id"], kind="mergesort")
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        n = len(pdf)
-        for i in range(3):
-            p = _os.path.join(src, f"b{i}.parquet")
-            pdf.iloc[i * n // 3 : (i + 1) * n // 3].to_parquet(p, index=False)
-            _os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
-        result = run_wait_time_stream_once(
-            spark, src, _os.path.join(out, "ckpt"), res=8
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return result
+    return _run_staged_stream(
+        _thirds(_stream_pdf(t, "ts", "event_id")),
+        lambda src, ckpt: run_wait_time_stream_once(spark, src, ckpt, res=8),
+    )
 
 
 REGISTRY.update({"stream_wait_time": (q_stream_wait_time, O_WAIT_TIME_HIST)})
@@ -10217,30 +10101,15 @@ def q_stream_speed(spark, sf_dir):
     detector (streaming/microbatch.py ``stream_speed_outliers``): 3
     TIME-ORDERED staged files; flagged segments emit exactly once —
     gated against the SAME oracle as batch ``speed_outliers``."""
-    import os as _os
-    import shutil
-    import tempfile
-
     from ..streaming.microbatch import run_speed_stream_once
 
     t = _traj(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="streamspeed_")
-    try:
-        src = _os.path.join(out, "src")
-        _os.makedirs(src)
-        pdf = t.toPandas().sort_values(["ts", "event_id"], kind="mergesort")
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        n = len(pdf)
-        for i in range(3):
-            p = _os.path.join(src, f"b{i}.parquet")
-            pdf.iloc[i * n // 3 : (i + 1) * n // 3].to_parquet(p, index=False)
-            _os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
-        result = run_speed_stream_once(
-            spark, src, _os.path.join(out, "ckpt"), vmax_micro=VMAX_MICRO
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return result
+    return _run_staged_stream(
+        _thirds(_stream_pdf(t, "ts", "event_id")),
+        lambda src, ckpt: run_speed_stream_once(
+            spark, src, ckpt, vmax_micro=VMAX_MICRO
+        ),
+    )
 
 
 REGISTRY.update({"stream_speed": (q_stream_speed, O_SPEED_OUTLIERS)})
@@ -10506,32 +10375,15 @@ def q_stream_cohorts(spark, sf_dir):
     (streaming/microbatch.py ``stream_cohorts``): 3 TIME-ORDERED staged
     files; each (entity, period) emits exactly once with its cohort —
     gated against the SAME oracle as batch ``user_cohorts``."""
-    import os as _os
-    import shutil
-    import tempfile
-
     from ..streaming.microbatch import run_cohorts_stream_once
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "user_id", "ts", "event_id"
     )
-    out = tempfile.mkdtemp(prefix="streamcohort_")
-    try:
-        src = _os.path.join(out, "src")
-        _os.makedirs(src)
-        pdf = ev.toPandas().sort_values(["ts", "event_id"], kind="mergesort")
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        n = len(pdf)
-        for i in range(3):
-            p = _os.path.join(src, f"b{i}.parquet")
-            pdf.iloc[i * n // 3 : (i + 1) * n // 3].to_parquet(p, index=False)
-            _os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
-        result = run_cohorts_stream_once(
-            spark, src, _os.path.join(out, "ckpt"), period_s=604_800
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return result
+    return _run_staged_stream(
+        _thirds(_stream_pdf(ev, "ts", "event_id")),
+        lambda src, ckpt: run_cohorts_stream_once(spark, src, ckpt, period_s=604_800),
+    )
 
 
 REGISTRY.update({"stream_cohorts": (q_stream_cohorts, O_USER_COHORTS)})
@@ -11287,31 +11139,15 @@ def q_stream_trip_od(spark, sf_dir):
     TIME-ORDERED staged files; closed trips emit exactly once, the
     final open trip finishes like batch's trailing trip — gated against
     the SAME oracle as batch ``trip_od``."""
-    import os as _os
-    import shutil
-    import tempfile
-
     from ..streaming.microbatch import run_trip_od_stream_once
 
     t = _traj(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="streamtripod_")
-    try:
-        src = _os.path.join(out, "src")
-        _os.makedirs(src)
-        pdf = t.toPandas().sort_values(["ts", "event_id"], kind="mergesort")
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        n = len(pdf)
-        for i in range(3):
-            p = _os.path.join(src, f"b{i}.parquet")
-            pdf.iloc[i * n // 3 : (i + 1) * n // 3].to_parquet(p, index=False)
-            _os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
-        result = run_trip_od_stream_once(
-            spark, src, _os.path.join(out, "ckpt"),
-            max_gap_s=TRIP_GAP_S, res=8,
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return result
+    return _run_staged_stream(
+        _thirds(_stream_pdf(t, "ts", "event_id")),
+        lambda src, ckpt: run_trip_od_stream_once(
+            spark, src, ckpt, max_gap_s=TRIP_GAP_S, res=8
+        ),
+    )
 
 
 REGISTRY.update({"stream_trip_od": (q_stream_trip_od, O_TRIP_OD)})
@@ -11687,33 +11523,18 @@ def q_stream_heavy_hitters(spark, sf_dir):
     sketch counters and key counts are pure additive state, so the
     final heavy-hitter frame matches batch ``cms_heavy_hitters`` under
     any batching — gated against the SAME oracle (20th parity kernel)."""
-    import os as _os
-    import shutil
-    import tempfile
-
     from ..streaming.microbatch import run_cms_stream_once
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     ev.createOrReplaceTempView("__scms_events")
-    pdf = spark.sql(
+    t = spark.sql(
         f"SELECT event_id, {TRAJ_LAT_SQL} AS lat, {TRAJ_LON_SQL} AS lon "
         "FROM __scms_events"
-    ).toPandas().sort_values("event_id", kind="mergesort")
-    out = tempfile.mkdtemp(prefix="streamcms_")
-    try:
-        src = _os.path.join(out, "src")
-        _os.makedirs(src)
-        n = len(pdf)
-        for i in range(3):
-            p = _os.path.join(src, f"b{i}.parquet")
-            pdf.iloc[i * n // 3 : (i + 1) * n // 3].to_parquet(p, index=False)
-            _os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
-        result = run_cms_stream_once(
-            spark, src, _os.path.join(out, "ckpt"), res=8, mass_denom=256
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return result
+    )
+    return _run_staged_stream(
+        _thirds(_stream_pdf(t, "event_id")),
+        lambda src, ckpt: run_cms_stream_once(spark, src, ckpt, res=8, mass_denom=256),
+    )
 
 
 REGISTRY.update({"stream_heavy_hitters": (q_stream_heavy_hitters, O_HEAVY_HITTERS_CMS)})
@@ -12008,30 +11829,13 @@ def q_stream_line_density(spark, sf_dir):
     TIME-ORDERED staged files; every segment's cell walk emits exactly
     once when its end ping arrives — gated against the SAME oracle as
     batch ``line_density`` (21st parity kernel)."""
-    import os as _os
-    import shutil
-    import tempfile
-
     from ..streaming.microbatch import run_line_density_stream_once
 
     t = _traj(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="streamlinedens_")
-    try:
-        src = _os.path.join(out, "src")
-        _os.makedirs(src)
-        pdf = t.toPandas().sort_values(["ts", "event_id"], kind="mergesort")
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        n = len(pdf)
-        for i in range(3):
-            p = _os.path.join(src, f"b{i}.parquet")
-            pdf.iloc[i * n // 3 : (i + 1) * n // 3].to_parquet(p, index=False)
-            _os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
-        result = run_line_density_stream_once(
-            spark, src, _os.path.join(out, "ckpt"), res=8
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return result
+    return _run_staged_stream(
+        _thirds(_stream_pdf(t, "ts", "event_id")),
+        lambda src, ckpt: run_line_density_stream_once(spark, src, ckpt, res=8),
+    )
 
 
 REGISTRY.update({"stream_line_density": (q_stream_line_density, O_LINE_DENSITY)})
@@ -12266,10 +12070,6 @@ def q_stream_tile_trend(spark, sf_dir):
     maximal-disorder staging — the five moment sums are order-free, so
     the final per-tile state finished with the batch slope algebra must
     equal ``tile_trend`` exactly (same oracle)."""
-    import os as _os
-    import shutil
-    import tempfile
-
     from ..streaming.microbatch import run_tile_trend_stream_once
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -12278,22 +12078,10 @@ def q_stream_tile_trend(spark, sf_dir):
         f"SELECT ts, value, {TRAJ_LAT_SQL} AS lat, {TRAJ_LON_SQL} AS lon "
         "FROM __trend_events"
     )
-    out = tempfile.mkdtemp(prefix="streamtrend_")
-    try:
-        src = _os.path.join(out, "src")
-        _os.makedirs(src)
-        pdf = t.toPandas().sort_values(["ts", "value"], kind="mergesort")
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        for i in range(3):
-            p = _os.path.join(src, f"b{i}.parquet")
-            pdf.iloc[i::3].to_parquet(p, index=False)
-            _os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
-        result = run_tile_trend_stream_once(
-            spark, src, _os.path.join(out, "ckpt"), res=7
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return result
+    return _run_staged_stream(
+        _thirds(_stream_pdf(t, "ts", "value"), interleaved=True),
+        lambda src, ckpt: run_tile_trend_stream_once(spark, src, ckpt, res=7),
+    )
 
 
 REGISTRY.update({"stream_tile_trend": (q_stream_tile_trend, O_TILE_TREND)})
@@ -13289,10 +13077,6 @@ def q_stream_centroid_drift(spark, sf_dir):
     (streaming/microbatch.py ``stream_centroid_moments``): order-free
     sums, rank-interleaved staging; the finished state must equal
     ``centroid_drift`` exactly (same oracle)."""
-    import os as _os
-    import shutil
-    import tempfile
-
     from ..streaming.microbatch import run_centroid_drift_stream_once
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -13301,22 +13085,10 @@ def q_stream_centroid_drift(spark, sf_dir):
         f"SELECT ts, {TRAJ_LAT_SQL} AS lat, {TRAJ_LON_SQL} AS lon "
         "FROM __cdrift_events"
     )
-    out = tempfile.mkdtemp(prefix="streamcdrift_")
-    try:
-        src = _os.path.join(out, "src")
-        _os.makedirs(src)
-        pdf = t.toPandas().sort_values(["ts", "lat"], kind="mergesort")
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        for i in range(3):
-            p = _os.path.join(src, f"b{i}.parquet")
-            pdf.iloc[i::3].to_parquet(p, index=False)
-            _os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
-        result = run_centroid_drift_stream_once(
-            spark, src, _os.path.join(out, "ckpt")
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return result
+    return _run_staged_stream(
+        _thirds(_stream_pdf(t, "ts", "lat"), interleaved=True),
+        lambda src, ckpt: run_centroid_drift_stream_once(spark, src, ckpt),
+    )
 
 
 REGISTRY.update(
@@ -14241,31 +14013,15 @@ def q_stream_hour_type_mix(spark, sf_dir):
     (streaming/microbatch.py ``stream_hour_type_counts``): order-free
     counts, rank-interleaved staging; the finished state must equal
     ``hour_type_mix`` exactly (same oracle)."""
-    import os as _os
-    import shutil
-    import tempfile
-
     from ..streaming.microbatch import run_hour_type_stream_once
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "ts", "event_type"
     )
-    out = tempfile.mkdtemp(prefix="streamhtm_")
-    try:
-        src = _os.path.join(out, "src")
-        _os.makedirs(src)
-        pdf = ev.toPandas().sort_values(["ts", "event_type"], kind="mergesort")
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        for i in range(3):
-            p = _os.path.join(src, f"b{i}.parquet")
-            pdf.iloc[i::3].to_parquet(p, index=False)
-            _os.utime(p, (1000 * (i + 1), 1000 * (i + 1)))
-        result = run_hour_type_stream_once(
-            spark, src, _os.path.join(out, "ckpt")
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return result
+    return _run_staged_stream(
+        _thirds(_stream_pdf(ev, "ts", "event_type"), interleaved=True),
+        lambda src, ckpt: run_hour_type_stream_once(spark, src, ckpt),
+    )
 
 
 REGISTRY.update(

@@ -8,9 +8,20 @@ as (a) deterministic batch-with-checkpoint commits (sources/snapshots.py)
 and (b) real Structured Streaming for continuous ingest: files ->
 transformations -> ``foreachBatch`` snapshot commits keyed by epoch id, so
 replayed epochs after a crash are idempotent (exactly-once sink).
+
+Every ``run_*_once`` runner is one ``build`` (the ``stream_*`` operator
+over the file-source stream) plus one ``finish`` (the batch-side rollup
+of the sink), driven by ``_drive_stream_once``: the file source, the
+availableNow trigger, the sink and the await live there alone. Memory
+sinks get a fresh name per run and their view is dropped once the result
+is built (also when the query fails); the returned frame keeps the sink's
+rows alive by itself.
 """
 
 from __future__ import annotations
+
+import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -32,6 +43,55 @@ def stream_images(
     )
 
 
+def _drive_stream_once(
+    spark: SparkSession,
+    src: str,
+    checkpoint: str,
+    build: Callable[[DataFrame], DataFrame],
+    finish: Callable[[DataFrame], DataFrame] | str = lambda t: t,
+    *,
+    mode: str,
+    out_dir: str | None = None,
+    max_files_per_trigger: int = 1,
+) -> DataFrame:
+    """Run ``build(stream)`` over every file staged in ``src`` (availableNow
+    trigger, ``max_files_per_trigger`` files per micro-batch, file mtime
+    fixes the order) and return ``finish`` applied to the sink's rows:
+    a callable gets the sink as a DataFrame, a SQL string reads it as
+    ``{t}``.
+
+    The sink is a memory sink under a fresh name, or — with ``out_dir`` —
+    a parquet file sink: only the file sink can recover a checkpoint, so
+    repeated runs on one checkpoint continue the same watermark. The file
+    sink is read back with the query's own schema, so a run that emitted
+    nothing yet still reads as an empty frame. The memory sink's view is
+    dropped in ``finally``, also when the query fails; ``finish`` must
+    therefore build its result before returning (a DataFrame over the
+    sink keeps the rows alive without the view)."""
+    out = build(
+        stream_images(spark, src, max_files_per_trigger=max_files_per_trigger)
+    )
+    name = f"stream_sink_{uuid.uuid4().hex}"
+    w = (
+        out.writeStream.outputMode(mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+    )
+    if out_dir is None:
+        w = w.format("memory").queryName(name)
+    else:
+        w = w.format("parquet").option("path", out_dir)
+    try:
+        w.start().awaitTermination()
+        if out_dir is None:
+            t = spark.table(name)
+        else:
+            t = spark.read.schema(out.schema).parquet(out_dir)
+        return spark.sql(finish, t=t) if isinstance(finish, str) else finish(t)
+    finally:
+        spark.catalog.dropTempView(name)
+
+
 def stream_tile_counts(stream: DataFrame, res: int = 6) -> DataFrame:
     """Continuous per-tile counts (stateful aggregation, complete mode)."""
     return assign_tiles(stream, res=res).groupBy("tile").agg(
@@ -44,17 +104,11 @@ def run_tile_counts_once(
 ) -> DataFrame:
     """Drive the streaming agg to completion on available data (memory
     sink, availableNow trigger) and return the result table."""
-    q = (
-        stream_tile_counts(stream_images(spark, images_dir), res=res)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("tile_counts_stream")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _drive_stream_once(
+        spark, images_dir, checkpoint,
+        lambda s: stream_tile_counts(s, res=res),
+        mode="complete", max_files_per_trigger=4,
     )
-    q.awaitTermination()
-    return spark.sql("SELECT tile, n_images FROM tile_counts_stream")
 
 
 def stream_windowed_counts(
@@ -94,28 +148,15 @@ def run_windowed_counts_once(
     — the memory sink can't recover a checkpoint, the file sink can, so
     repeated runs continue the same watermark — and return all rows
     emitted so far."""
-    schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(events_dir)
-        # NTZ parquet timestamps are not a valid event-time column
-        .withColumn("ts", F.col("ts").cast("timestamp"))
+    return _drive_stream_once(
+        spark, events_dir, checkpoint,
+        lambda s: stream_windowed_counts(
+            # NTZ parquet timestamps are not a valid event-time column
+            s.withColumn("ts", F.col("ts").cast("timestamp")),
+            window_dur, watermark,
+        ),
+        mode="append", out_dir=out_dir,
     )
-    q = (
-        stream_windowed_counts(stream, window_dur, watermark)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.schema(
-        "win_start timestamp, win_end timestamp, event_type string, n long"
-    ).parquet(out_dir)
 
 
 def stream_dedup_exact(
@@ -148,26 +189,14 @@ def run_dedup_exact_once(
     """Drive the streaming dedup over available files into a parquet sink
     (append mode; checkpoint-recoverable) and return everything emitted
     so far."""
-    schema = spark.read.parquet(events_dir).schema
     keys = key_cols or ["user_id", "event_type"]
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(events_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
+    return _drive_stream_once(
+        spark, events_dir, checkpoint,
+        lambda s: stream_dedup_exact(
+            s.withColumn("ts", F.col("ts").cast("timestamp")), keys, "ts", watermark
+        ),
+        mode="append", out_dir=out_dir,
     )
-    q = (
-        stream_dedup_exact(stream, keys, "ts", watermark)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir)
 
 
 def stream_tile_distinct(stream: DataFrame, res: int = 6, id_col: str = "image_id") -> DataFrame:
@@ -234,28 +263,16 @@ def run_tile_distinct_once(
     """Drive the stateful distinct counter over available data (one file
     per trigger so state actually carries across micro-batches) and return
     the LATEST update per tile."""
-    q = (
-        stream_tile_distinct(
-            stream_images(spark, images_dir, max_files_per_trigger=1).select(
-                "image_id", "lat", "lon"
-            ),
-            res=res,
-        )
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("tile_distinct_stream")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
+    return _drive_stream_once(
+        spark, images_dir, checkpoint,
+        lambda s: stream_tile_distinct(s.select("image_id", "lat", "lon"), res=res),
         """
         SELECT tile, total_rows, est_milli FROM (
           SELECT *, row_number() OVER (PARTITION BY tile ORDER BY total_rows DESC) AS rn
-          FROM tile_distinct_stream
+          FROM {t}
         ) WHERE rn = 1
-        """
+        """,
+        mode="update",
     )
 
 
@@ -418,26 +435,14 @@ def run_heatmap_stream_once(
     rollup runs batch-side over the memory sink — the streaming part is
     exactly the stateful histogram a live deployment would run; batch
     parity with ``heatmap_stats`` is the oracle contract."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    q = (
-        stream_pixel_histogram(st, res=res, tile_px=tile_px)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("heatmap_stream")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     from ..operators.heatmap import tile_rollup
 
-    return tile_rollup(spark.table("heatmap_stream"))
+    return _drive_stream_once(
+        spark, points_dir, checkpoint,
+        lambda s: stream_pixel_histogram(s, res=res, tile_px=tile_px),
+        tile_rollup,
+        mode="complete",
+    )
 
 
 def stream_od_transitions(
@@ -656,29 +661,21 @@ def run_od_late_stream_once(
     (availableNow, one file per trigger) and roll the emitted
     transitions up to the batch ``od_flows`` shape — same downstream
     rollup rationale as ``run_od_stream_once``."""
-    schema = spark.read.parquet(events_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(events_dir)
+    return _drive_stream_once(
+        spark, events_dir, checkpoint,
+        lambda s: stream_od_transitions_late(s, res=res, lateness_s=lateness_s),
+        _od_rollup,
+        mode="append",
     )
-    name = f"od_late_stream_{abs(hash(events_dir)) % 10**8}"
-    q = (
-        stream_od_transitions_late(st, res=res, lateness_s=lateness_s)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    t = spark.table(name)
-    ent = t.columns[0]  # the entity key column (not hard-coded 'user_id')
+
+
+def _od_rollup(t: DataFrame) -> DataFrame:
+    """Emitted (entity, from_tile, to_tile) transitions -> the batch
+    ``od_flows`` shape. Both OD kernels emit the entity key column first,
+    so it is read from there, not hard-coded as 'user_id'."""
     return t.groupBy("from_tile", "to_tile").agg(
         F.count(F.lit(1)).alias("n_trips"),
-        F.countDistinct(ent).alias("n_entities"),
+        F.countDistinct(t.columns[0]).alias("n_entities"),
     )
 
 
@@ -692,31 +689,11 @@ def run_od_stream_once(
     aggregation after a stateful append source would need its own
     output-mode gymnastics and is not what a deployment does (transitions
     land in a log; flows are a downstream rollup)."""
-    schema = spark.read.parquet(events_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(events_dir)
-    )
-    name = f"od_stream_{abs(hash(events_dir)) % 10**8}"
-    q = (
-        stream_od_transitions(st, res=res)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.table(name)
-        .groupBy("from_tile", "to_tile")
-        .agg(
-            F.count(F.lit(1)).alias("n_trips"),
-            F.countDistinct("user_id").alias("n_entities"),
-        )
+    return _drive_stream_once(
+        spark, events_dir, checkpoint,
+        lambda s: stream_od_transitions(s, res=res),
+        _od_rollup,
+        mode="append",
     )
 
 
@@ -823,25 +800,11 @@ def run_geofence_stream_once(
     """Drive the streaming geofence detector over all staged files
     (availableNow, one file per trigger) and return the emitted
     transition log from the memory sink."""
-    schema = spark.read.parquet(events_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(events_dir)
+    return _drive_stream_once(
+        spark, events_dir, checkpoint,
+        lambda s: stream_geofence_transitions(s, rings),
+        mode="append",
     )
-    name = f"gf_stream_{abs(hash(events_dir)) % 10**8}"
-    q = (
-        stream_geofence_transitions(st, rings)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 def stream_decayed_tiles(
@@ -870,26 +833,13 @@ def run_decayed_stream_once(
     """Drive the streaming decayed raster over all staged files
     (availableNow, complete mode, memory sink) and return the final
     state; batch parity with ``decayed_tiles`` is the oracle contract."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
+    return _drive_stream_once(
+        spark, points_dir, checkpoint,
+        lambda s: stream_decayed_tiles(
+            s, res=res, anchor_epoch=anchor_epoch, halflife_s=halflife_s
+        ),
+        mode="complete",
     )
-    q = (
-        stream_decayed_tiles(
-            st, res=res, anchor_epoch=anchor_epoch, halflife_s=halflife_s
-        )
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("decay_stream")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table("decay_stream")
 
 
 def stream_tile_cap(
@@ -970,32 +920,18 @@ def run_tile_cap_stream_once(
     """Drive the streaming cap reservoir over all staged files (one per
     trigger) and flatten each tile's FINAL state to (point_id, tile,
     rk) — the exact schema and values of batch ``tile_cap_sample``."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    q = (
-        stream_tile_cap(st, res=res, cap=cap)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("tile_cap_stream")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
+    return _drive_stream_once(
+        spark, points_dir, checkpoint,
+        lambda s: stream_tile_cap(s, res=res, cap=cap),
         """
         SELECT point_id, tile, CAST(pos + 1 AS INT) AS rk FROM (
           SELECT *, row_number() OVER (PARTITION BY tile ORDER BY n_seen DESC) AS rn
-          FROM tile_cap_stream
+          FROM {t}
         ) latest
         LATERAL VIEW posexplode(ids) t AS pos, point_id
         WHERE rn = 1
-        """
+        """,
+        mode="update",
     )
 
 
@@ -1057,33 +993,18 @@ def run_tile_first_seen_stream_once(
     """Drive the streaming first-seen state over all staged files (one
     per trigger) and return each tile's FINAL state — the exact schema
     and values of batch ``tile_first_seen``."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"first_seen_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_tile_first_seen(st, res=res)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"""
+    return _drive_stream_once(
+        spark, points_dir, checkpoint,
+        lambda s: stream_tile_first_seen(s, res=res),
+        """
         SELECT tile, first_day, n_days, n_events FROM (
           SELECT *, row_number() OVER (
             PARTITION BY tile ORDER BY n_events DESC, n_days DESC
           ) AS rn
-          FROM {name}
+          FROM {t}
         ) WHERE rn = 1
-        """
+        """,
+        mode="update",
     )
 
 
@@ -1145,26 +1066,10 @@ def run_gyration_stream_once(
     entity's FINAL state with the same DECIMAL(38,0) rational-rg^2
     algebra as batch ``radius_of_gyration`` — byte-identical output
     schema and values."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"gyr_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_gyration_moments(st)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"""
+    return _drive_stream_once(
+        spark, points_dir, checkpoint,
+        stream_gyration_moments,
+        """
         SELECT entity, CAST(n AS BIGINT) AS n_events,
                CAST(CAST(n AS decimal(38,0))
                     * (CAST(sxx AS decimal(38,0)) + CAST(syy AS decimal(38,0)))
@@ -1175,9 +1080,10 @@ def run_gyration_stream_once(
                  AS decimal(38,0)) AS rg2_den
         FROM (
           SELECT *, row_number() OVER (PARTITION BY entity ORDER BY n DESC) AS rn
-          FROM {name}
+          FROM {t}
         ) WHERE rn = 1
-        """
+        """,
+        mode="update",
     )
 
 
@@ -1309,36 +1215,25 @@ def run_staypoints_stream_once(
     ``seen``) qualifies iff it lasted ``min_stay_s``. Closed rows pass
     through untouched — the union is byte-equal to batch
     ``staypoints``."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"stay_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_staypoints(st, dist_micro, min_stay_s)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"""
-        SELECT entity, start_rn, end_rn, n_pts, start_ep, end_ep, ax, ay
-        FROM {name} WHERE closed = 1
-        UNION ALL
-        SELECT entity, start_rn, end_rn, n_pts, start_ep, end_ep, ax, ay
-        FROM (
-          SELECT *, row_number() OVER (PARTITION BY entity
-                                       ORDER BY seen DESC) AS rn2
-          FROM {name} WHERE closed = 0
-        ) WHERE rn2 = 1 AND end_ep - start_ep >= {min_stay_s}
-        """
+    return _drive_stream_once(
+        spark, points_dir, checkpoint,
+        lambda s: stream_staypoints(s, dist_micro, min_stay_s),
+        lambda t: spark.sql(
+            """
+            SELECT entity, start_rn, end_rn, n_pts, start_ep, end_ep, ax, ay
+            FROM {t} WHERE closed = 1
+            UNION ALL
+            SELECT entity, start_rn, end_rn, n_pts, start_ep, end_ep, ax, ay
+            FROM (
+              SELECT *, row_number() OVER (PARTITION BY entity
+                                           ORDER BY seen DESC) AS rn2
+              FROM {t} WHERE closed = 0
+            ) WHERE rn2 = 1 AND end_ep - start_ep >= {min_stay_s}
+            """,
+            t=t,
+            min_stay_s=min_stay_s,
+        ),
+        mode="append",
     )
 
 
@@ -1431,31 +1326,16 @@ def run_dwell_stream_once(
     ``dwell_time`` shape: (tile, total_dwell_s, n_segments,
     n_entities). Every segment is emitted exactly once (when the next
     event closes it), so the rollup is byte-equal to batch."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"dwell_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_dwell(st, res)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"""
+    return _drive_stream_once(
+        spark, points_dir, checkpoint,
+        lambda s: stream_dwell(s, res),
+        """
         SELECT tile, sum(gap) AS total_dwell_s,
                count(*) AS n_segments,
                count(DISTINCT entity) AS n_entities
-        FROM {name} GROUP BY tile
-        """
+        FROM {t} GROUP BY tile
+        """,
+        mode="append",
     )
 
 
@@ -1541,32 +1421,17 @@ def run_wait_time_stream_once(
     roll the emitted gaps into exactly the batch ``wait_time_hist``
     shape: (bucket, n_gaps, total_gap_s, max_gap_s) with the same
     length(bin(gap)) integer bucketing."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"wait_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_wait_time(st, res)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"""
+    return _drive_stream_once(
+        spark, points_dir, checkpoint,
+        lambda s: stream_wait_time(s, res),
+        """
         SELECT CAST(length(bin(gap)) AS INT) AS bucket,
                count(*) AS n_gaps,
                sum(gap) AS total_gap_s,
                max(gap) AS max_gap_s
-        FROM {name} GROUP BY 1
-        """
+        FROM {t} GROUP BY 1
+        """,
+        mode="append",
     )
 
 
@@ -1663,26 +1528,10 @@ def run_speed_stream_once(
     """Drive the streaming teleport detector over all staged files; the
     emitted rows ARE the batch ``speed_outliers`` output (no rollup
     needed — flagged segments emit exactly once)."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"speed_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_speed_outliers(st, vmax_micro)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"SELECT entity, start_ep, end_ep, dt_s, dist2 FROM {name}"
+    return _drive_stream_once(
+        spark, points_dir, checkpoint,
+        lambda s: stream_speed_outliers(s, vmax_micro),
+        mode="append",
     )
 
 
@@ -1766,30 +1615,15 @@ def run_cohorts_stream_once(
     """Drive the streaming cohort tracker over all staged files and
     roll the (entity, cohort, period) emissions into exactly the batch
     ``user_cohorts`` shape: (cohort_period, periods_since, n_active)."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"cohort_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_cohorts(st, period_s)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"""
+    return _drive_stream_once(
+        spark, points_dir, checkpoint,
+        lambda s: stream_cohorts(s, period_s),
+        """
         SELECT cohort AS cohort_period, period - cohort AS periods_since,
                count(DISTINCT entity) AS n_active
-        FROM {name} GROUP BY 1, 2
-        """
+        FROM {t} GROUP BY 1, 2
+        """,
+        mode="append",
     )
 
 
@@ -1888,39 +1722,24 @@ def run_trip_od_stream_once(
     each entity's final OPEN trip (max ``seen`` snapshot), and roll the
     endpoints into exactly the batch ``trip_od`` shape — stationary
     trips excluded."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"tripod_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_trip_od(st, max_gap_s, res)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"""
+    return _drive_stream_once(
+        spark, points_dir, checkpoint,
+        lambda s: stream_trip_od(s, max_gap_s, res),
+        """
         WITH trips AS (
-          SELECT entity, from_tile, to_tile FROM {name} WHERE closed = 1
+          SELECT entity, from_tile, to_tile FROM {t} WHERE closed = 1
           UNION ALL
           SELECT entity, from_tile, to_tile FROM (
             SELECT *, row_number() OVER (PARTITION BY entity
                                          ORDER BY seen DESC) AS rn2
-            FROM {name} WHERE closed = 0
+            FROM {t} WHERE closed = 0
           ) WHERE rn2 = 1
         )
         SELECT from_tile, to_tile, count(*) AS n_trips,
                count(DISTINCT entity) AS n_entities
         FROM trips WHERE from_tile <> to_tile GROUP BY 1, 2
-        """
+        """,
+        mode="append",
     )
 
 
@@ -1992,42 +1811,33 @@ def run_cms_stream_once(
     values of batch ``cms_heavy_hitters``."""
     from ..operators.sketches import CMS_DEPTH, cms_score
 
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
+    def finish(t: DataFrame) -> DataFrame:
+        fin = spark.sql(
+            """
+            SELECT kind, id, n FROM (
+              SELECT *, row_number() OVER (
+                PARTITION BY kind, id ORDER BY n DESC
+              ) AS rn FROM {t}
+            ) WHERE rn = 1
+            """,
+            t=t,
+        ).localCheckpoint(eager=True)
+        exact = fin.filter(F.col("kind") == CMS_DEPTH).select(
+            F.col("id").alias("key"), F.col("n").alias("exact_n")
+        )
+        counters = fin.filter(F.col("kind") < CMS_DEPTH).select(
+            F.col("kind").cast("int").alias("row"),
+            F.col("id").alias("bucket"),
+            F.col("n").alias("c"),
+        )
+        return cms_score(exact, counters, mass_denom)
+
+    return _drive_stream_once(
+        spark, points_dir, checkpoint,
+        lambda s: stream_cms_hitters(s, res=res),
+        finish,
+        mode="update",
     )
-    name = f"cms_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_cms_hitters(st, res=res)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    fin = spark.sql(
-        f"""
-        SELECT kind, id, n FROM (
-          SELECT *, row_number() OVER (
-            PARTITION BY kind, id ORDER BY n DESC
-          ) AS rn FROM {name}
-        ) WHERE rn = 1
-        """
-    ).localCheckpoint(eager=True)
-    exact = fin.filter(F.col("kind") == CMS_DEPTH).select(
-        F.col("id").alias("key"), F.col("n").alias("exact_n")
-    )
-    counters = fin.filter(F.col("kind") < CMS_DEPTH).select(
-        F.col("kind").cast("int").alias("row"),
-        F.col("id").alias("bucket"),
-        F.col("n").alias("c"),
-    )
-    return cms_score(exact, counters, mass_denom)
 
 
 def stream_line_density(
@@ -2117,30 +1927,15 @@ def run_line_density_stream_once(
     """Drive the streaming segment rasterizer over all staged files and
     roll the emitted (segment, cell) rows into exactly the batch
     ``line_density`` shape."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"linedens_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_line_density(st, res=res)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"""
+    return _drive_stream_once(
+        spark, points_dir, checkpoint,
+        lambda s: stream_line_density(s, res=res),
+        """
         SELECT tile, CAST(count(*) AS BIGINT) AS n_segments,
                CAST(count(DISTINCT entity) AS BIGINT) AS n_entities
-        FROM {name} GROUP BY 1
-        """
+        FROM {t} GROUP BY 1
+        """,
+        mode="append",
     )
 
 
@@ -2209,39 +2004,24 @@ def run_tile_trend_stream_once(
     """Drive the streaming trend moments over all staged files and finish
     each tile's FINAL state with the same rational-slope algebra as batch
     ``tile_trend`` — byte-identical output schema and values."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"trend_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_tile_trend(st, res=res)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # update-mode memory sink keeps every trigger's row; the per-tile
     # final state is the one with the largest n (sums only grow)
-    return spark.sql(
-        f"""
+    return _drive_stream_once(
+        spark, points_dir, checkpoint,
+        lambda s: stream_tile_trend(s, res=res),
+        """
         WITH fin AS (
           SELECT tile, n, st, sy, sty, stt,
                  row_number() OVER (PARTITION BY tile ORDER BY n DESC) AS rk
-          FROM {name}
+          FROM {t}
         )
         SELECT tile, CAST(n AS BIGINT) AS n_events, CAST(st AS BIGINT) AS sum_t,
                CAST(sy AS BIGINT) AS sum_y,
                CAST(n * sty - st * sy AS BIGINT) AS slope_num,
                CAST(n * stt - st * st AS BIGINT) AS slope_den
         FROM fin WHERE rk = 1
-        """
+        """,
+        mode="update",
     )
 
 
@@ -2292,30 +2072,14 @@ def run_centroid_drift_stream_once(
     """Drive the streaming daily moments over all staged files and
     finish with the batch ``centroid_drift`` lag algebra — byte-identical
     output schema and values."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"cdrift_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_centroid_moments(st)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"""
+    return _drive_stream_once(
+        spark, points_dir, checkpoint,
+        stream_centroid_moments,
+        """
         WITH fin AS (
           SELECT day, n, sx, sy,
                  row_number() OVER (PARTITION BY day ORDER BY n DESC) AS rk
-          FROM {name}
+          FROM {t}
         ),
         daily AS (SELECT day, n, sx, sy FROM fin WHERE rk = 1),
         lagged AS (
@@ -2331,7 +2095,8 @@ def run_centroid_drift_stream_once(
                CAST(sy * pn - py * n AS BIGINT) AS dy_num,
                CAST(n * pn AS BIGINT) AS drift_den
         FROM lagged
-        """
+        """,
+        mode="update",
     )
 
 
@@ -2377,31 +2142,15 @@ def run_hour_type_stream_once(
     """Drive the streaming contingency over all staged files and finish
     with the batch ``hour_type_mix`` marginal/residual algebra —
     byte-identical output schema and values."""
-    schema = spark.read.parquet(points_dir).schema
-    st = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(points_dir)
-    )
-    name = f"htmix_stream_{abs(hash(points_dir)) % 10**8}"
-    q = (
-        stream_hour_type_counts(st)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(
-        f"""
+    return _drive_stream_once(
+        spark, points_dir, checkpoint,
+        stream_hour_type_counts,
+        """
         WITH fin AS (
           SELECT hour, etype, obs,
                  row_number() OVER (PARTITION BY hour, etype
                                     ORDER BY obs DESC) AS rk
-          FROM {name}
+          FROM {t}
         ),
         obs AS (SELECT hour, etype, obs FROM fin WHERE rk = 1),
         mh AS (SELECT hour, sum(obs) AS n_hour FROM obs GROUP BY 1),
@@ -2417,5 +2166,6 @@ def run_hour_type_stream_once(
         JOIN mh ON mh.hour = o.hour
         JOIN mt ON mt.etype = o.etype
         CROSS JOIN tot t
-        """
+        """,
+        mode="update",
     )

@@ -339,16 +339,29 @@ def test_stream_od_transitions_parity_and_order_contract(spark, tmp_path):
             os.utime(p, (mt, mt))
         return str(src)
 
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    # the memory sink's view is dropped once the result is built, on the
+    # success path and on the failure path alike
+    views = temp_views()
     src = stage(tmp_path / "ok", [(1000, slice(0, 3)), (2000, slice(3, 5))])
     got = run_od_stream_once(
         spark, src, str(tmp_path / "ok" / "ckpt"), res=4
     )
+    assert temp_views() == views
+    assert spark.streams.active == []
     ev = spark.createDataFrame(rows)
     want = od_flows(ev, "user_id", "ts", res=4, order_tiebreak="event_id")
     gp = sorted(map(tuple, got.collect()))
     wp = sorted(map(tuple, want.collect()))
     assert gp == wp and len(gp) > 0
 
+    views = temp_views()
     src2 = stage(tmp_path / "bad", [(1000, slice(3, 5)), (2000, slice(0, 3))])
     with pytest.raises(Exception, match="out-of-order|ordered-ingestion|StreamingQuery"):
         run_od_stream_once(spark, src2, str(tmp_path / "bad" / "ckpt"), res=4)
+    assert temp_views() == views
+    assert spark.streams.active == []
+    # the dropped view does not take the first result's rows with it
+    assert sorted(map(tuple, got.collect())) == gp
