@@ -4260,16 +4260,31 @@ def knox_stat(
     e_den). nst >> e_num/e_den signals spatio-temporal clustering
     (outbreaks, bursts that move).
 
-    Plan — never all-pairs, and (r8) never a materialized pair ROW:
+    Plan — never all-pairs, and never a materialized pair ROW:
     * SPACE: points block into ds-sized cells on SHIFTED non-negative
-      micro-degrees (truncating int division == floor only there); one
-      side fans over the 3x3 neighbor ring and a COGROUP on the cell key
-      hands each cell its fan candidates (the fanned copy hits the
-      partner's cell at one offset; id_a < id_b kills the mirror), where
-      the exact Chebyshev/time predicates run as chunked NumPy
-      broadcasts emitting one partial (ns, nst) row per cell. Per-cell
-      occupancy is gated at ``max_cell`` (counted, loud) because the
-      pair work is sum of occupancy^2 over cells.
+      micro-degrees (truncating int division == floor only there), so a
+      close pair lies in one cell or in two neighboring ones. Each point
+      emits a HOME row keyed by its cell and a forward HALF-FAN of 4 rows
+      keyed by the neighbors at (+1,-1), (+1,0), (+1,+1), (0,+1); with
+      their negations these cover the 8 neighbors once, so every
+      cross-cell pair meets in exactly one cell (fan row x home row) and
+      same-cell pairs come from home rows alone. The 5n rows are
+      repartitioned on the cell key and sorted by (cell, side) within
+      partitions; ONE ``mapInPandas`` kernel walks each partition's
+      sorted Arrow batches, carrying the trailing cell into the next
+      batch so no cell is split, and counts all cells of a batch at once
+      by a segment-wise NumPy pair expansion (repeat/cumsum index
+      arithmetic, no per-cell Python call) in steps of 2^16 candidate
+      pairs. It emits one partial (ns, nst) row per partition.
+    * Id rule (the oracle's ``a.id < b.id`` over the 9-fan, duplicate
+      ids included): a fan x home pair counts when the ids differ; a
+      home x home pair is tested once per unordered pair and counts when
+      the ids differ — exactly one orientation passes ``a.id < b.id``.
+    * Memory: a Python worker holds one Arrow batch, one carried cell
+      (at most 5 x ``max_cell`` rows: its home rows plus 4 neighbors'
+      fans) and one expansion step; the JVM sort spills as usual.
+      Per-cell occupancy is gated at ``max_cell`` (counted, loud) before
+      any pair work, because that work is sum of occupancy^2 over cells.
     * TIME: a distinct-timestamp histogram plus one single-partition
       sort + cumsum + searchsorted pass (count over (t, t+dt] per
       distinct t) — O(distinct ts) state, O(n log n) work; same-second
@@ -4319,67 +4334,100 @@ def knox_stat(
                 "resolution or pre-thin (tile_cap_sample), or raise "
                 "max_cell deliberately (None disables the gate)"
             )
-    offs = F.explode(
+    # SPACE: home row (side 0) + forward half-fan (side 1), one sorted
+    # cell-keyed pass (see Plan)
+    half_fan = F.explode(
         F.array(
             *[
-                F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                for dx in (-1, 0, 1)
-                for dy in (-1, 0, 1)
+                F.struct(
+                    F.lit(dx).alias("dx"), F.lit(dy).alias("dy"),
+                    F.lit(int((dx, dy) != (0, 0))).alias("side"),
+                )
+                for dx, dy in ((0, 0), (1, -1), (1, 0), (1, 1), (0, 1))
             ]
         )
     ).alias("o")
-    fan = pts.select(
-        F.col("id").alias("a_id"), F.col("x").alias("a_x"),
-        F.col("y").alias("a_y"), F.col("t").alias("a_t"), "cx", "cy", offs
-    ).select(
-        "a_id", "a_x", "a_y", "a_t",
-        (F.col("cx") + F.col("o.dx")).alias("fx"),
-        (F.col("cy") + F.col("o.dy")).alias("fy"),
+    cell_rows = pts.select("id", "x", "y", "t", "cx", "cy", half_fan).select(
+        (F.col("cx") + F.col("o.dx")).alias("kx"),
+        (F.col("cy") + F.col("o.dy")).alias("ky"),
+        F.col("o.side").alias("side"),
+        "id", "x", "y", "t",
     )
-    # SPACE pair counts: the fan-join formulation materialized every
-    # candidate (fan row, partner) pair through a sort-merge join —
-    # sum-of-occupancy^2 rows (1.2e9 at sf1, >600 s) just to feed two
-    # conditional COUNTS. The counts need no pair rows: cogroup the fan
-    # side and the cell points per cell key and evaluate the Chebyshev /
-    # time predicates as chunked NumPy broadcasts, emitting ONE partial
-    # (ns, nst) row per cell (r8). Same candidate set, same predicates,
-    # exact integer counts; the only shuffle is the 9x fan of narrow
-    # rows into the cogroup.
-    def _cell_counts(left, right):
+    # candidate pairs per expansion step: 2^16 keeps every temporary
+    # cache-resident; 10^7-pair steps ran the same counts ~2.5x slower
+    chunk_pairs = 1 << 16
+
+    def _space_kernel(batches):
         import numpy as np
         import pandas as pd
 
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame({"ns": [0], "nst": [0]})
-        a_id = left["a_id"].to_numpy(np.int64)
-        a_x = left["a_x"].to_numpy(np.int64)
-        a_y = left["a_y"].to_numpy(np.int64)
-        a_t = left["a_t"].to_numpy(np.int64)
-        b_id = right["id"].to_numpy(np.int64)
-        b_x = right["x"].to_numpy(np.int64)
-        b_y = right["y"].to_numpy(np.int64)
-        b_t = right["t"].to_numpy(np.int64)
+        cols = ("kx", "ky", "side", "id", "x", "y", "t")
         ns = nst = 0
-        # chunk the fan side so the pair matrix stays ~10^7 cells even
-        # at the max_cell gate limit
-        step = max(1, 10_000_000 // max(len(b_id), 1))
-        for i in range(0, len(a_id), step):
-            sl = slice(i, i + step)
-            near_s = (
-                (a_id[sl, None] < b_id[None, :])
-                & (np.abs(a_x[sl, None] - b_x[None, :]) <= ds_micro)
-                & (np.abs(a_y[sl, None] - b_y[None, :]) <= ds_micro)
-            )
-            ns += int(near_s.sum())
-            nst += int(
-                (near_s & (np.abs(a_t[sl, None] - b_t[None, :]) <= dt_sec)).sum()
-            )
-        return pd.DataFrame({"ns": [ns], "nst": [nst]})
+
+        def cell_breaks(a):
+            # True between two rows of different cells
+            kx, ky = a["kx"], a["ky"]
+            return (kx[1:] != kx[:-1]) | (ky[1:] != ky[:-1])
+
+        def count(a):
+            # a: whole cells sorted by (kx, ky, side), so home rows lead
+            nonlocal ns, nst
+            home = a["side"] == 0
+            x, y, t, ids = a["x"], a["y"], a["t"], a["id"]
+            n = len(ids)
+            new = np.r_[True, cell_breaks(a)]
+            starts = np.flatnonzero(new)
+            cell = np.cumsum(new) - 1
+            cell_start = starts[cell]
+            n_home = np.add.reduceat(home.astype(np.int64), starts)
+            home_end = cell_start + n_home[cell]
+            # partners are the cell's home rows [first, home_end): a fan
+            # row meets all of them, a home row only those after it (each
+            # home pair once)
+            first = np.where(home, np.arange(n) + 1, cell_start)
+            cnt = home_end - first
+            cum = np.cumsum(cnt)
+            lo = 0
+            while lo < n:
+                base = int(cum[lo - 1]) if lo else 0
+                hi = int(np.searchsorted(cum, base + chunk_pairs, "right"))
+                hi = max(hi, lo + 1)
+                c = cnt[lo:hi]
+                tot = int(cum[hi - 1]) - base
+                if tot:
+                    # segment-wise expansion: row lo+i repeats c[i] times
+                    # against the consecutive partners first[lo+i] + 0..c[i]-1
+                    ri = np.repeat(first[lo:hi] - (cum[lo:hi] - c - base), c)
+                    ri += np.arange(tot)
+                    near = np.abs(np.repeat(x[lo:hi], c) - x[ri]) <= ds_micro
+                    near &= np.abs(np.repeat(y[lo:hi], c) - y[ri]) <= ds_micro
+                    near &= np.repeat(ids[lo:hi], c) != ids[ri]
+                    ns += int(np.count_nonzero(near))
+                    near &= np.abs(np.repeat(t[lo:hi], c) - t[ri]) <= dt_sec
+                    nst += int(np.count_nonzero(near))
+                lo = hi
+
+        held = None
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            a = {c: pdf[c].to_numpy(np.int64) for c in cols}
+            if held is not None:
+                a = {c: np.concatenate([held[c], a[c]]) for c in cols}
+            # the trailing cell may go on in the next batch: carry it
+            brk = np.flatnonzero(cell_breaks(a))
+            cut = int(brk[-1]) + 1 if len(brk) else 0
+            held = {c: v[cut:] for c, v in a.items()}
+            if cut:
+                count({c: v[:cut] for c, v in a.items()})
+        if held is not None:
+            count(held)
+        yield pd.DataFrame({"ns": [ns], "nst": [nst]})
 
     sp = (
-        fan.groupBy("fx", "fy")
-        .cogroup(pts.groupBy("cx", "cy"))
-        .applyInPandas(_cell_counts, schema="ns long, nst long")
+        cell_rows.repartition("kx", "ky")
+        .sortWithinPartitions("kx", "ky", "side")
+        .mapInPandas(_space_kernel, schema="ns long, nst long")
         .agg(
             # coalesce: zero candidate pairs must report 0 like the
             # oracle's count(*) FILTER, not NULL (round-7 ADVICE)

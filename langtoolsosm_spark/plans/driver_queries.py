@@ -12091,9 +12091,11 @@ def q_knox_stat(spark, sf_dir):
     """Knox space-time interaction test (operators/spatial.py
     ``knox_stat``): exact integer pair counts close in space (Chebyshev
     <= 0.2 deg), in time (<= 7 days), and in both, plus the exact
-    rational independence expectation. The oracle replays the identical
-    cell-blocked candidate generation and range-window time margin —
-    never an all-pairs join at any tier."""
+    rational independence expectation. The oracle keeps the 9-cell fan
+    join (``a.id < b.id``) and the range-window time margin as the spec —
+    never an all-pairs join at any tier; the engine counts the same pairs
+    with a forward half-fan in one sorted cell pass, and the counts are
+    identical."""
     from ..operators.spatial import knox_stat
 
     return knox_stat(_traj(spark, sf_dir), ds_micro=200_000, dt_sec=604_800)

@@ -1,6 +1,7 @@
 """Physical-plan assertions: pushdown, pruning, broadcast, codegen
 (SURVEY.md §4 — "the plan you'd want, not the first one that passed")."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from langtoolsosm_spark.operators.pip_join import bbox_filter
@@ -634,6 +635,17 @@ def test_knox_stat_single_fact_lineage(spark):
     assert "BatchEvalPython" not in plan
     # every leaf that feeds the three subtrees is the checkpointed RDD
     assert plan.count("Scan ExistingRDD") >= 3
+    # the space counts are ONE sorted cell-keyed map pass, not a per-cell
+    # cogroup; the only other Python node is the time histogram's kernel
+    assert "FlatMapCoGroupsInPandas" not in plan
+    assert "FlatMapGroupsInPandas" not in plan
+    assert plan.count("MapInPandas") == 2
+    assert plan.count("MapInPandas _space_kernel") == 1
+    assert plan.count("MapInPandas _nt_kernel") == 1
+    # the occupancy gate raises inside the call, before any plan exists
+    # to run a Python pass on
+    with pytest.raises(ValueError, match="max_cell"):
+        knox_stat(df, ds_micro=5000, dt_sec=500, max_cell=1)
 
 
 def test_freq_spectrum_broadcasts_octave_dim(spark):

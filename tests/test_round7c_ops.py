@@ -459,6 +459,98 @@ def test_knox_stat_exact_and_gate(spark):
         knox_stat(df, ds_micro=0, dt_sec=100)
 
 
+def _knox_brute(rows, ds, dt):
+    """All-pairs NumPy (n, ns, nt, nst) over (event_id, epoch, lat, lon)
+    rows: space pairs need distinct ids (the oracle's a.id < b.id over
+    the 9-fan), time pairs count every unordered pair of rows."""
+    if not rows:
+        return 0, 0, 0, 0
+    ids, t, lat, lon = (np.array(c) for c in zip(*rows))
+    x = np.floor(lat.astype(np.float64) * 1_000_000.0).astype(np.int64)
+    y = np.floor(lon.astype(np.float64) * 1_000_000.0).astype(np.int64)
+    i, j = np.triu_indices(len(rows), 1)
+    s = (
+        (np.abs(x[i] - x[j]) <= ds)
+        & (np.abs(y[i] - y[j]) <= ds)
+        & (ids[i] != ids[j])
+    )
+    tm = np.abs(t[i] - t[j]) <= dt
+    return len(rows), int(s.sum()), int(tm.sum()), int((s & tm).sum())
+
+
+def test_knox_stat_matches_brute_force(spark):
+    from langtoolsosm_spark.operators.spatial import knox_stat
+
+    # ds = 1e6 / 64 micro-degrees: every k/64-degree coordinate is an
+    # exact float, lies exactly on a cell edge (180e6 is a multiple of
+    # ds), and grid neighbors are exactly ds apart
+    ds, dt = 15_625, 100
+    rng = np.random.default_rng(7)
+    rows = []
+    # lattice on cell edges, plus one point 1 micro past the ds boundary
+    for i in range(4):
+        for j in range(4):
+            rows.append((len(rows), 50 * (i + j), 10 + i / 64, 20 + j / 64))
+    rows.append((len(rows), 300, 10 + 4 / 64 + 1.5e-6, 20.0))
+    # negative lat/lon around the equator and the prime meridian, where
+    # floor (not truncation) of the micro-degrees decides the cell
+    for v in (-0.0000005, 0.0, -1 / 64, -2 / 64 - 0.0000005, -3 / 64):
+        rows.append((len(rows), int(rng.integers(0, 400)), v, v / 2))
+        rows.append((len(rows), int(rng.integers(0, 400)), -30 + v, -40 - v))
+    # duplicate ids: same coordinates, same cell, and a neighboring cell
+    rows += [
+        (900, 0, 30.0, 30.0), (900, 10, 30.0, 30.0),
+        (900, 20, 30.0 + 1 / 128, 30.0), (900, 30, 30.0 - 1 / 128, 30.0),
+        (901, 40, 30.0, 30.0 + 1 / 256), (901, 40, 30.0 - 1 / 256, 30.0 - 1 / 128),
+    ]
+    # isolated point: its forward fan lands in cells with no home rows
+    rows.append((len(rows) + 1000, 0, 50.0, 50.0))
+    # one hot cell beside sparse neighbors
+    hot = rng.uniform(0, 1 / 64, size=(80, 2))
+    for a, b in hot:
+        rows.append((len(rows) + 1000, int(rng.integers(0, 400)), 40 + a, 5 + b))
+    for a, b in rng.uniform(-1 / 64, 2 / 64, size=(6, 2)):
+        rows.append((len(rows) + 1000, int(rng.integers(0, 400)), 40 + a, 5 + b))
+
+    want = _knox_brute(rows, ds, dt)
+    # the fixture really has pairs at exactly ds and at ds + 1
+    x = np.floor(np.array([r[2] for r in rows]) * 1_000_000.0).astype(np.int64)
+    gaps = set(np.abs(x[:, None] - x[None, :]).ravel().tolist())
+    assert {ds, ds + 1} <= gaps
+
+    def frame(rs):
+        pdf = pd.DataFrame(rs, columns=["event_id", "epoch", "lat", "lon"])
+        return spark.createDataFrame(
+            pdf, "event_id long, epoch long, lat double, lon double"
+        ).select(
+            "event_id", F.timestamp_seconds("epoch").alias("ts"), "lat", "lon"
+        )
+
+    def got(rs):
+        r = knox_stat(frame(rs), ds_micro=ds, dt_sec=dt).collect()
+        assert len(r) == 1
+        r = r[0]
+        n = r["n_events"]
+        assert (r["e_num"], r["e_den"]) == (
+            2 * r["ns_pairs"] * r["nt_pairs"], n * (n - 1)
+        )
+        return n, r["ns_pairs"], r["nt_pairs"], r["nst_pairs"]
+
+    assert want[1] > 0 and want[3] > 0
+    assert got(rows) == want
+    # cells straddle Arrow batches: the kernel carries the trailing cell
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "7")
+        assert got(rows) == want
+    finally:
+        spark.conf.set(key, old)
+    # one event and no event: zero counts, never NULL
+    assert got(rows[:1]) == (1, 0, 0, 0)
+    assert got([]) == (0, 0, 0, 0)
+
+
 def test_blur_scores_flat_vs_textured(spark):
     from langtoolsosm_spark.functions import imagecodec as ic
     from langtoolsosm_spark.operators.images import blur_scores
